@@ -49,7 +49,7 @@ def read_transcripts(
     ``part=pmod(xxhash64(conv_id), N)`` so resume reads prune.
 
     The fallback HONORS ``snapshot_id`` when the path was written by
-    ``commit_stage`` (checkpoint/snapshots.py records a JSON manifest
+    ``commit_stage`` (checkpoint/lineage.py records a JSON manifest
     per commit): the read pins the manifest's exact fileset — atomic
     visibility + time travel until a bucket is overwritten, with
     SnapshotExpiredError when it was.  Only a bare directory with no
@@ -67,7 +67,7 @@ def read_transcripts(
     except Exception:
         import os
 
-        from ner_spark.checkpoint.snapshots import (
+        from ner_spark.checkpoint.lineage import (
             has_snapshot_log,
             read_snapshot,
         )

@@ -1,17 +1,12 @@
 """Hot-conversation skew handling (SURVEY.md §4.3; BASELINE.json:14
 "skew handled explicitly").
 
-Two passes:
-1. diagnose: cheap ``groupBy(conv_id).count()`` + percentile → the
-   hot list (count > α·p999), collected to the driver and broadcast
-   (it is tiny by construction — the tail of a Zipf).
-2. apply: hot conversations get a salt
-   ``pmod(xxhash64(conv_id, floor(turn_idx / B)), S)`` appended to the
-   partition key, splitting a whale conversation into S fragments of
-   ~B consecutive turns.  Safe for per-turn operators (the tagger);
-   order within a fragment is restored by sortWithinPartitions.
-   Window-crossing stages use overlap-emission + dedup instead
-   (kg/cooccur.py handles fragments by repartitioning on conv_id).
+One pass: per-turn stages lay rows out by the turn-block fragment key
+``xxhash64(conv_id, floor(turn_idx / B))``, splitting a whale
+conversation into fragments of ~B consecutive turns with no diagnosis
+job.  Safe for per-turn operators (the tagger); order within a
+fragment is restored by sortWithinPartitions.  Window-crossing stages
+repartition back on conv_id (kg/cooccur.py).
 
 AQE's skew-join split covers *joins* only — groupBy/window/UDF skew
 is ours to handle, hence this module.
@@ -21,56 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-SALT_BUCKETS = 16
 TURNS_PER_FRAGMENT = 256
-
-
-def hot_conversations(
-    transcripts: DataFrame,
-    alpha: float = 4.0,
-    min_turns: int = 1024,
-    adaptive: bool = False,
-) -> list[str]:
-    """conv_ids whose turn count exceeds the hot threshold.
-
-    Default: fixed threshold ``min_turns`` — ONE job (groupBy+filter+
-    collect), the filter fused into the aggregate's reduce side.
-    ``adaptive=True`` adds a percentile_approx pass so the threshold
-    tracks the distribution (max(α·p99.9, min_turns)); costs a second
-    job + sketch merge, only worth it when the turn distribution is
-    unknown."""
-    counts = transcripts.groupBy("conv_id").agg(F.count("*").alias("n"))
-    threshold = float(min_turns)
-    if adaptive:
-        counts = counts.localCheckpoint(eager=True)  # reused by 2 jobs
-        # sketch accuracy must beat n_groups/hot_rank or the rank error
-        # swallows the tail and reports the max as p999
-        p999 = counts.agg(
-            F.expr("percentile_approx(n, 0.999, 5000)").alias("p")
-        ).collect()[0]["p"]
-        threshold = max(alpha * float(p999 or 0), threshold)
-    hot = counts.filter(F.col("n") > threshold).select("conv_id").collect()
-    return [r["conv_id"] for r in hot]
-
-
-def with_salt(
-    df: DataFrame,
-    hot: list[str],
-    buckets: int = SALT_BUCKETS,
-    fragment: int = TURNS_PER_FRAGMENT,
-) -> DataFrame:
-    """Add a ``salt`` column: 0 for cold convs; hot convs fragment by
-    consecutive turn blocks (pure function of the row — deterministic
-    under retries)."""
-    is_hot = F.col("conv_id").isin(hot) if hot else F.lit(False)
-    salt = F.when(
-        is_hot,
-        F.pmod(
-            F.xxhash64("conv_id", F.floor(F.col("turn_idx") / fragment)),
-            F.lit(buckets),
-        ),
-    ).otherwise(F.lit(0))
-    return df.withColumn("salt", salt.cast("int"))
 
 
 # Per-(partition, conversation) row bound the salted layout must hold:
@@ -101,33 +47,19 @@ def partition_load_violations(
     )
 
 
-def salted_repartition(
-    df: DataFrame, num_partitions: int, diagnose: bool = False
-) -> DataFrame:
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Skew-proof layout for per-turn stages.
 
-    Default (``diagnose=False``): hash-partition on the turn-block
-    fragment key ``xxhash64(conv_id, turn_idx div B)`` for EVERY row —
-    no key can own more than ~B consecutive turns per bucket, so
-    whales split automatically, with ZERO extra jobs (round 1's
-    diagnosed variant spent a full corpus scan + driver collect before
-    the tag job even started; at 10¹² turns that pass costs more than
-    the skew it prevents).  Safe because the tagger is per-turn: any
-    partitioning is correct, and the (conv_id, turn_idx)
-    sortWithinPartitions invariant is applied after this layout
-    regardless.
-
-    ``diagnose=True``: the two-pass variant (hot-list + targeted
-    salt), for stages that need conversation co-location and can only
-    afford to split genuinely hot keys.
+    Hash-partition on the turn-block fragment key
+    ``xxhash64(conv_id, turn_idx div B)`` for EVERY row — no key can
+    own more than ~B consecutive turns per bucket, so whales split
+    automatically, with ZERO extra jobs (round 1's diagnosed variant
+    spent a full corpus scan + driver collect before the tag job even
+    started; at 10¹² turns that pass costs more than the skew it
+    prevents).  Safe because the tagger is per-turn: any partitioning
+    is correct, and the (conv_id, turn_idx) sortWithinPartitions
+    invariant is applied after this layout regardless.
     """
-    if diagnose:
-        hot = hot_conversations(df)
-        return (
-            with_salt(df, hot)
-            .repartition(num_partitions, "conv_id", "salt")
-            .drop("salt")
-        )
     frag = F.xxhash64(
         "conv_id", F.floor(F.col("turn_idx") / F.lit(TURNS_PER_FRAGMENT))
     )

@@ -239,8 +239,9 @@ def tag_turns(
 ) -> DataFrame:
     """transcripts → one row per turn with its span array.
 
-    ``salt_hot=True`` runs the two-pass hot-conversation salting
-    (ner_spark.kg.skew) before the layout repartition.
+    ``salt_hot=True`` lays turns out by the turn-block fragment key
+    (ner_spark.kg.skew.salted_repartition) instead of by conv_id, so
+    hot conversations split across tasks.
     """
     df = transcripts.select("conv_id", "turn_idx", "text")
     # 4 tasks per core: conversation sizes are Zipf, so 1-task-per-core

@@ -391,7 +391,7 @@ def kg_contracts(spark, sf_dir):
     - ``snapshot_pinning``: the S2 snapshot-read semantics hold end-to
       -end — pinned read, stray-file atomicity, no-launder on resume,
       time travel, expiry detection
-      (checkpoint/snapshots.snapshot_contract_violations);
+      (checkpoint/lineage.snapshot_contract_violations);
     - ``skew_salt_parity`` / ``skew_triple_parity``: over a planted-
       whale corpus (5,000-turn conversation), the hot-conversation-
       salted layout and the plain conv_id layout emit IDENTICAL
@@ -450,9 +450,10 @@ def kg_contracts(spark, sf_dir):
     )
     ent_cons = _gap("entity_conservation", entity_conservation_gap(entities, mentions))
     edge_cons = _gap("edge_conservation", edge_conservation_gap(st["edges"], triples))
-    from ner_spark.checkpoint.lineage import resume_contract_violations
-
-    from ner_spark.checkpoint.snapshots import snapshot_contract_violations
+    from ner_spark.checkpoint.lineage import (
+        resume_contract_violations,
+        snapshot_contract_violations,
+    )
 
     lineage = spark.createDataFrame(
         [

@@ -103,11 +103,9 @@ def main(argv: list[str] | None = None) -> None:
 
         spark-submit --py-files ner_spark.zip -m ner_spark.pipeline \\
             --input <transcripts path-or-iceberg-table> \\
-            --root <output root> [--stage all|tag|triples] \\
-            [--from-checkpoint auto] [--mode model|gazetteer]
+            --root <output root> [--mode model|gazetteer]
 
-    Resumable by default: committed buckets are skipped
-    (checkpoint/resume.py); pass --no-resume to recompute everything.
+    Resumable: committed buckets are skipped (checkpoint/resume.py).
     """
     import argparse
 
@@ -118,10 +116,7 @@ def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--root", required=True)
-    ap.add_argument("--stage", default="all")
     ap.add_argument("--mode", default="model")
-    ap.add_argument("--from-checkpoint", default="auto")
-    ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args(argv)
 
     spark = SparkSession.getActiveSession() or get_spark("ner_spark-pipeline")

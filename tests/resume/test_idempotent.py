@@ -11,7 +11,7 @@ import shutil
 import pandas as pd
 import pytest
 
-from ner_spark.checkpoint.lineage import committed_buckets, read_lineage, validate_stage
+from ner_spark.checkpoint.lineage import committed_buckets, lineage_rows, validate_stage
 from ner_spark.checkpoint.resume import run_resumable, validate_all
 from ner_spark.fixtures.transcripts import transcripts_df
 
@@ -37,10 +37,10 @@ def test_full_run_then_noop_resume(spark, root):
         "mentions": True,
         "triples": True,
     }
-    lineage_before = read_lineage(spark, root, "triples").toPandas()
+    lineage_before = pd.DataFrame(lineage_rows(root, "triples"))
     again = _triples_pdf(run_resumable(spark, t, root, mode="gazetteer"))
     pd.testing.assert_frame_equal(first, again)
-    lineage_after = read_lineage(spark, root, "triples").toPandas()
+    lineage_after = pd.DataFrame(lineage_rows(root, "triples"))
     # no bucket recommitted on the no-op resume
     pd.testing.assert_frame_equal(
         lineage_before.sort_values("part").reset_index(drop=True)[
@@ -110,8 +110,6 @@ def test_stale_partitions_not_recommitted(spark, root):
     bucket domain can't produce k) must not be swept into the commit's
     read-back stats and blessed with lineage they never earned; same
     for an uncommitted torn-write dir inside the domain."""
-    from pyspark.sql import functions as F
-
     from ner_spark.checkpoint.lineage import commit_stage
 
     t = transcripts_df(spark, 20).select("conv_id", "turn_idx", "text")
@@ -142,8 +140,8 @@ def test_stale_partitions_not_recommitted(spark, root):
     ]
     assert not left, left
     # stored lineage counts cover the whole input exactly once
-    lin = read_lineage(spark, root, "probe")
-    assert lin.agg(F.sum("output_rows")).collect()[0][0] == t.count()
+    lin = lineage_rows(root, "probe")
+    assert sum(r["output_rows"] for r in lin) == t.count()
 
 
 def test_duplicate_input_rows_dedup(spark, root):

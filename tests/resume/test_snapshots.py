@@ -11,11 +11,12 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from ner_spark.checkpoint.lineage import commit_stage, with_bucket
-from ner_spark.checkpoint.snapshots import (
+from ner_spark.checkpoint.lineage import (
     SnapshotExpiredError,
+    commit_stage,
     read_snapshot,
     snapshots,
+    with_bucket,
 )
 from ner_spark.fixtures.transcripts import transcripts_df
 from ner_spark.io.read import read_transcripts
@@ -137,30 +138,9 @@ def test_stray_file_cannot_launder_into_next_snapshot(spark, tmp_path):
 
 
 def test_snapshot_contract_scenario_is_clean(spark):
-    from ner_spark.checkpoint.snapshots import snapshot_contract_violations
+    from ner_spark.checkpoint.lineage import snapshot_contract_violations
 
     assert snapshot_contract_violations(spark) == 0
-
-
-def test_manifest_covers_lineage_after_crashed_manifest_write(
-    spark, tmp_path
-):
-    """Coverage comes from lineage, not the writer's memory: a run
-    that crashed AFTER its lineage rows but BEFORE its manifest write
-    leaves committed buckets with no parent-manifest coverage -- the
-    next commit must re-scan (not drop) them."""
-    root = str(tmp_path)
-    t = transcripts_df(spark, 24)
-    commit_stage(_slice(t, {0, 1}), root, "turns", n_buckets=N_BUCKETS)
-    commit_stage(_slice(t, {0, 1, 2}), root, "turns", n_buckets=N_BUCKETS)
-    # simulate the crash: bucket 2's lineage is committed but its
-    # manifest never landed
-    snap_dir = os.path.join(root, "_snapshots", "turns")
-    newest = max(f for f in os.listdir(snap_dir) if f.endswith(".json"))
-    os.remove(os.path.join(snap_dir, newest))
-
-    commit_stage(t, root, "turns", n_buckets=N_BUCKETS)  # writes only {3}
-    assert read_snapshot(spark, root, "turns").count() == t.count()
 
 
 def test_noop_commit_creates_no_snapshot(spark, tmp_path):

@@ -12,7 +12,6 @@ import pandas as pd
 
 from ner_spark.fixtures.transcripts import transcripts_df
 from ner_spark.kg.cooccur import extract_triples
-from ner_spark.kg.skew import hot_conversations
 from ner_spark.ner.tagger import tag_mentions, tag_turns
 
 N_CONVS = 40  # + the pinned 5,000-turn whale
@@ -24,12 +23,6 @@ TRIPLE_KEY = ["conv_id", "turn_idx", "subj", "pred", "obj"]
 def _sorted(df, key) -> pd.DataFrame:
     pdf = df.select(key).toPandas()
     return pdf.sort_values(key).reset_index(drop=True)
-
-
-def test_whale_is_diagnosed_hot(spark):
-    t = transcripts_df(spark, N_CONVS, whale=True)
-    hot = hot_conversations(t)
-    assert len(hot) >= 1, "the 5,000-turn whale must cross the threshold"
 
 
 def test_salted_mentions_match_unsalted(spark):

@@ -22,7 +22,7 @@ def test_read_transcripts_iceberg_branch_falls_back(spark, tmp_path):
         assert got.count() == t.count()
         assert set(got.columns) == set(t.columns)
         # a PINNED read over a bare dir (no snapshot log) must raise,
-        # never silently return un-pinned rows (checkpoint/snapshots
+        # never silently return un-pinned rows (checkpoint/lineage
         # honors the pin when the path was written by commit_stage —
         # tests/resume/test_snapshots.py)
         with pytest.raises(ValueError, match="no snapshot log"):
