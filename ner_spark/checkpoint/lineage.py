@@ -151,7 +151,7 @@ def _drop_stale_partitions(
             os.remove(_row_path(root, stage, r["part"]))
 
 
-def _bucket_files(data_dir: str, part: int) -> dict[str, list[int]]:
+def _bucket_files(data_dir: str, part: int | str) -> dict[str, list[int]]:
     """relative path → [size, mtime_ns] for the parquet files of one
     ``part=k`` dir.  The mtime_ns is the per-file integrity token: a
     file overwritten IN PLACE with identical name and size still gets
@@ -256,13 +256,19 @@ def commit_stage(
 
 
 def validate_stage(spark: SparkSession, root: str, stage: str) -> bool:
-    """Re-checksum the stage directory against its lineage rows in one
-    groupBy("part") pass (detects torn writes: data without a row, a
-    row without data, and a rows or checksum mismatch all fail)."""
+    """Compare the stage's parquet files with the rows' filesets (a
+    stray, missing, truncated or rewritten file fails unread), then
+    re-checksum the data against the rows in one groupBy("part") pass
+    (detects torn writes: data without a row, a row without data, and a
+    rows or checksum mismatch all fail)."""
     rows = lineage_rows(root, stage)
     data_dir = os.path.join(root, stage)
     if not os.path.isdir(data_dir):
         return not rows
+    parts = [e[len("part="):] for e in os.listdir(data_dir) if e.startswith("part=")]
+    on_disk = {f: v for p in parts for f, v in _bucket_files(data_dir, p).items()}
+    if on_disk != {f: v for r in rows for f, v in r["files"].items()}:
+        return False
     data = spark.read.parquet(data_dir)
     cols = [c for c in data.columns if c != "part"]
     actual = (

@@ -17,7 +17,8 @@ Two execution branches, dispatched on the distinct-edge count:
   dwarfs a single collect at this size.  Round 1 measured the
   distributed loop at 122.6s on a graph union-find finishes in
   milliseconds; this branch is why that query now takes seconds.
-- **large graph**: the distributed star loop.  One Spark action per
+- **large graph**: the distributed star loop (star_loop_components).
+  One Spark action per
   round (a LAZY checkpoint materialized by the convergence-fingerprint
   job — round 1 ran an eager checkpoint job PLUS a fingerprint job per
   round, doubling fixed latency).  Uses a reliable ``checkpoint()``
@@ -32,6 +33,9 @@ driver-checked exactly vs a DuckDB recursive-CTE closure in
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 # Above this many distinct edges the driver union-find branch would
@@ -40,12 +44,7 @@ from pyspark.sql import DataFrame, functions as F
 # realistic vocabulary-graph size cliff.
 SMALL_EDGE_THRESHOLD = 1_000_000
 
-# Distributed branch: checkpoint (cut lineage) every round — each star
-# pass references its input twice (join + agg on the same DF), so an
-# uncheckpointed chain recomputes history once per reference.  The
-# checkpoint is LAZY and is materialized by the fingerprint action, so
-# it costs no extra job.
-CHECKPOINT_EVERY = 1
+MAX_ROUNDS = 30  # star-loop cap; O(log² n) rounds converge far below it
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -129,56 +128,61 @@ def _checkpointed(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-def connected_components(
-    edges: DataFrame,
-    max_rounds: int = 30,
-    small_edge_threshold: int | None = None,
-) -> DataFrame:
-    """(src, dst) edge list → (node, component) with component = min
-    node id reachable.  Isolated nodes (no edges) are callers' concern
-    (left-join the node table afterwards; absent ⇒ own component).
-
-    ``small_edge_threshold`` overrides SMALL_EDGE_THRESHOLD (pass 0 to
-    force the distributed star loop regardless of graph size — used by
-    the ``graph_cc_dist`` oracle query so the external gate exercises
-    the branch that must be right at 10¹²-turn scale, not only the
-    driver union-find fast path)."""
-    from pyspark import StorageLevel
-
-    if small_edge_threshold is None:
-        small_edge_threshold = SMALL_EDGE_THRESHOLD
-    spark = edges.sparkSession
+@contextmanager
+def _edge_set(edges: DataFrame):
+    """(src, dst) → distinct (u, v) edges without self-loops, persisted
+    for the with-block so the branch decision and the branch's first
+    pass (collect or round 1) share one materialization."""
     e = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # One materialization serves the branch decision AND the chosen
-    # branch's first pass (collect or round 1) — no double compute.
-    e0 = e = e.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        n_edges = e.count()
-        if n_edges <= small_edge_threshold:
-            assign_pdf = _driver_union_find(e.toPandas())
-            return spark.createDataFrame(
-                assign_pdf, "node long, component long"
-            )
-        prev = None
-        for rnd in range(max_rounds):
-            e = _small_star(_large_star(e))
-            if (rnd + 1) % CHECKPOINT_EVERY == 0:
-                e = _checkpointed(e)
-            fp = _fingerprint(e)  # materializes the lazy checkpoint
-            if fp == prev:
-                break
-            prev = fp
-        # At the fixpoint every edge is (node, root), root < node.
-        assign = e.select(
-            F.col("u").alias("node"), F.col("v").alias("component")
-        )
-        roots = e.select(F.col("v").alias("node")).distinct().withColumn(
-            "component", F.col("node")
-        )
-        return assign.unionByName(roots).distinct()
+        yield e
     finally:
-        e0.unpersist()
+        e.unpersist()
+
+
+def _star_loop(e: DataFrame) -> DataFrame:
+    prev = None
+    for _ in range(MAX_ROUNDS):
+        # Checkpoint (cut lineage) every round — each star pass
+        # references its input twice (join + agg on the same DF), so an
+        # uncheckpointed chain recomputes history once per reference.
+        # The checkpoint is LAZY and is materialized by the fingerprint
+        # action, so it costs no extra job.
+        e = _checkpointed(_small_star(_large_star(e)))
+        fp = _fingerprint(e)
+        if fp == prev:
+            break
+        prev = fp
+    # At the fixpoint every edge is (node, root), root < node.
+    assign = e.select(
+        F.col("u").alias("node"), F.col("v").alias("component")
+    )
+    roots = e.select(F.col("v").alias("node")).distinct().withColumn(
+        "component", F.col("node")
+    )
+    return assign.unionByName(roots).distinct()
+
+
+def star_loop_components(edges: DataFrame) -> DataFrame:
+    """connected_components' distributed branch, whatever the size."""
+    with _edge_set(edges) as e:
+        return _star_loop(e)
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(src, dst) edge list → (node, component) with component = min
+    node id reachable.  Isolated nodes (no edges) are callers' concern
+    (left-join the node table afterwards; absent ⇒ own component).
+    Graphs of ≤ SMALL_EDGE_THRESHOLD distinct edges run the driver
+    union-find, larger ones the star loop."""
+    with _edge_set(edges) as e:
+        if e.count() <= SMALL_EDGE_THRESHOLD:
+            return e.sparkSession.createDataFrame(
+                _driver_union_find(e.toPandas()), "node long, component long"
+            )
+        return _star_loop(e)

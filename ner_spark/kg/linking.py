@@ -7,7 +7,7 @@ smaller than the mention stream at 10¹² turns, and the mention →
 entity assignment at the end is a broadcast join back onto mentions.
 
 Blocking is the hand-rolled deterministic MinHash banding from
-ner_spark.ops.textops (fixed hash family, no RNG state — stable under
+ner_spark.kg.minhash (fixed hash family, no RNG state — stable under
 any partitioning; ml.MinHashLSH was rejected for seed/partitioning
 instability, SURVEY.md §7 M4).  Surfaces are short (1–4 chars), so
 shingles are character 1+2-grams.
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ner_spark.ops.textops import (
+from ner_spark.kg.minhash import (
     N_BANDS,
     band_hash,
     lsh_candidate_pairs,
@@ -65,7 +65,7 @@ def _vocab_sigs(nodes: DataFrame) -> DataFrame:
     balance=False: ``nodes`` is a derived post-shuffle plan (groupBy
     over mentions), already distributed — and _balance's partition
     probe would EXECUTE the upstream stages under AQE (see
-    textops._balance docstring)."""
+    minhash._balance docstring)."""
     docs = nodes.select(
         F.col("node_id").alias("doc_id"),
         F.concat(F.col("label"), F.lit(":"), F.col("surface")).alias("text"),
@@ -97,7 +97,7 @@ def _node_sigs(nodes: DataFrame) -> DataFrame:
     repartition on node_id is a reuse boundary: both sides of the
     self-join read ONE materialized shuffle instead of re-running the
     64-slot signature stage per side (same trick as
-    lsh_candidate_pairs' exchange, textops.py)."""
+    lsh_candidate_pairs' exchange, kg/minhash.py)."""
     sigs = _vocab_sigs(nodes)
     return (
         nodes.join(sigs, nodes.node_id == sigs.doc_id)
@@ -120,13 +120,11 @@ def _score(est, lev_a_surface, lev_b_surface):
     return 0.4 * est + 0.4 * (1.0 - lev.cast("double") / maxlen) + F.lit(0.2)
 
 
-def match_edges_direct(
-    nodes: DataFrame, threshold: float = SIM_THRESHOLD
-) -> DataFrame:
+def match_edges_direct(nodes: DataFrame) -> DataFrame:
     """Small-vocabulary path: ONE broadcast self-join over the
     signature-enriched vocabulary, with the banding candidate rule
     (∃ band: band_hash_a == band_hash_b — the exact bucket key the
-    banding join uses, via the shared textops.band_hash, pre-computed
+    banding join uses, via the shared minhash.band_hash, pre-computed
     per node in _node_sigs) evaluated pairwise.  Edge set and sim
     values are identical to the banding path by construction
     (parity-pinned in tests/kg/test_linking_cc.py)."""
@@ -156,42 +154,13 @@ def match_edges_direct(
             F.col("b.node_id").alias("node_b"),
             F.round(sim, 6).alias("sim"),
         )
-        .filter(F.col("sim") >= threshold)
+        .filter(F.col("sim") >= SIM_THRESHOLD)
     )
 
 
-def match_edges(
-    nodes: DataFrame,
-    threshold: float = SIM_THRESHOLD,
-    direct: bool | None = None,
-) -> DataFrame:
-    """(node_a, node_b, sim) scored above threshold.  Dispatches on
-    vocabulary size: ≤ DIRECT_LINK_MAX rows take the single broadcast
-    self-join; larger vocabularies take the banding join.  Both
-    produce the same edges — see match_edges_direct.
-
-    ``direct=None`` needs a count: the nodes frame is persisted first
-    (idempotent on already-persisted frames — ops/kg_queries' stage
-    cache passes one) so the dispatch materialization also serves the
-    chosen branch, never a second execution of the vocabulary subtree
-    (the same pattern as kg/cc.py's branch decision).
-
-    NOTE — implicit persist: when the caller's ``nodes`` frame is NOT
-    already cached, this dispatch persists it at MEMORY_AND_DISK and
-    the returned (lazy) edge plan references that persisted frame, so
-    it is never unpersisted here.  Long-lived sessions making many
-    bare library calls should pass a pre-persisted vocabulary and
-    unpersist it themselves (ops/kg_queries' stage cache does exactly
-    this); otherwise each call with a fresh nodes frame leaves one
-    vocabulary-scale cached frame behind until the context ends."""
-    if direct is None:
-        if not nodes.is_cached:  # re-persist at another level raises
-            from pyspark import StorageLevel
-
-            nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-        direct = nodes.count() <= DIRECT_LINK_MAX
-    if direct:
-        return match_edges_direct(nodes, threshold)
+def match_edges_banding(nodes: DataFrame) -> DataFrame:
+    """Large-vocabulary path: LSH candidate pairs (candidate_pairs)
+    rejoined to both sides' surfaces and scored."""
     cands = candidate_pairs(nodes)
     a = nodes.alias("a")
     b = nodes.alias("b")
@@ -205,4 +174,14 @@ def match_edges(
     )
     return joined.select(
         "node_a", "node_b", F.round(sim, 6).alias("sim")
-    ).filter(F.col("sim") >= threshold)
+    ).filter(F.col("sim") >= SIM_THRESHOLD)
+
+
+def match_edges(nodes: DataFrame) -> DataFrame:
+    """(node_a, node_b, sim ≥ SIM_THRESHOLD): match_edges_direct up to
+    DIRECT_LINK_MAX nodes, else match_edges_banding (the same edges).
+    Pass a persisted vocabulary: the dispatch counts ``nodes`` and
+    either branch reads it several times."""
+    if nodes.count() <= DIRECT_LINK_MAX:
+        return match_edges_direct(nodes)
+    return match_edges_banding(nodes)

@@ -12,43 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ner_spark.kg.cc import connected_components
-from ner_spark.kg.linking import match_edges, surface_nodes
 
 
-def entity_assignments(
-    mentions: DataFrame,
-    nodes: DataFrame | None = None,
-    edges: DataFrame | None = None,
-) -> DataFrame:
-    """(surface, label, node_id, entity_id): every distinct surface
-    form mapped to its canonical entity via linking + CC.  Surfaces
-    with no match edge stay their own entity.
-
-    ``nodes`` (optional): a pre-built — ideally PERSISTED — surface
-    vocabulary.  The linking plan references the vocabulary several
-    times (signature docs + both sides of the pair rejoin + the final
-    component join), and CC's branch decision adds its own action; an
-    unpersisted vocabulary re-executes the mentions→groupBy subtree
-    for every one of those.  The vocabulary is orders of magnitude
-    smaller than the mention stream (the module-header scale
-    decision), so callers that run several actions should pass a
-    persisted frame (ops/kg_queries does, via its stage cache).
-    When neither ``nodes`` nor ``edges`` is passed, match_edges'
-    size dispatch persists the derived vocabulary at MEMORY_AND_DISK
-    and leaves it cached (see its docstring) — pass and own your
-    frames in long-lived sessions.
-
-    ``edges`` (optional): a pre-built — ideally PERSISTED —
-    match-edge frame (linking.match_edges output schema).  CC persists
-    its own projected copy internally (one materialization per CC
-    call), so the shared frame's win is ACROSS consumers: the
-    kg_match_edges/kg_cc_components/kg_contracts queries and this
-    function all read one cached frame instead of each re-executing
-    the signature self-join plan once."""
-    if nodes is None:
-        nodes = surface_nodes(mentions)
-    if edges is None:
-        edges = match_edges(nodes)
+def entity_assignments(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """(surface, label, node_id, n_mentions, entity_id): every distinct
+    surface form (linking.surface_nodes) mapped to its canonical entity
+    via CC over the match edges (linking.match_edges).  Surfaces with
+    no match edge stay their own entity."""
     edges = edges.select(
         F.col("node_a").alias("src"), F.col("node_b").alias("dst")
     )
@@ -68,10 +38,8 @@ def entity_assignments(
 def build_entities(
     mentions: DataFrame, assignments: DataFrame
 ) -> DataFrame:
-    """entity table: id, canonical surface, label, mention count,
-    first timestamp (needs mentions joined back to turn ts upstream —
-    here first_ts is the min (conv_id, turn_idx) marker columns if
-    present, else omitted)."""
+    """entity table: entity_id, canonical surface, label, mention
+    count."""
     m = mentions.join(
         F.broadcast(assignments.select("surface", "label", "entity_id")),
         ["surface", "label"],

@@ -131,8 +131,6 @@ def _stages(spark, sf_dir, materialize: bool = False) -> dict:
         st_view = st
     if materialize:
         if "entities" not in st:
-            from pyspark import StorageLevel
-
             from ner_spark.kg.materialize import (
                 build_edges,
                 build_entities,
@@ -148,9 +146,7 @@ def _stages(spark, sf_dir, materialize: bool = False) -> dict:
             # reset_stage_cache).
             nodes = _cached_nodes(spark, sf_dir, st, st_view)
             assignments = entity_assignments(
-                st_view["mentions"],
-                nodes=nodes,
-                edges=_cached_match_edges(spark, sf_dir),
+                nodes, _cached_match_edges(spark, sf_dir)
             ).persist(StorageLevel.MEMORY_AND_DISK)
             st["assignments"] = assignments
             st["entities"] = build_entities(st_view["mentions"], assignments)
@@ -403,7 +399,7 @@ def kg_contracts(spark, sf_dir):
       conversation — the whale is actually split
       (kg/skew.partition_load_violations);
     - ``linking_branch_parity``: the banding LSH join
-      (match_edges(direct=False) — the branch that engages above
+      (match_edges_banding — the branch that engages above
       DIRECT_LINK_MAX and runs at 10¹² turns) emits exactly the edge
       multiset the gate-scale direct broadcast path emits, over the
       REAL session vocabulary.
@@ -509,10 +505,9 @@ def kg_contracts(spark, sf_dir):
     )
 
     # -- linking branch parity (banding vs direct, real vocabulary) --
-    from ner_spark.kg.linking import match_edges
+    from ner_spark.kg.linking import match_edges_banding
 
-    nodes = _cached_nodes(spark, sf_dir)
-    banding = match_edges(nodes, direct=False)
+    banding = match_edges_banding(_cached_nodes(spark, sf_dir))
     link_parity = cnt(
         "linking_branch_parity", multiset_diff(banding, edges)
     )

@@ -171,10 +171,10 @@ def test_match_edges_direct_equals_banding_path(spark):
     """The size-dispatched direct (broadcast self-join) path must
     produce EXACTLY the banding path's edges -- same pairs, same sim
     values -- because it evaluates the same band-hash collision rule
-    pairwise (textops.band_hash) and the same scoring expressions."""
+    pairwise (minhash.band_hash) and the same scoring expressions."""
     from pyspark.sql import functions as F
 
-    from ner_spark.kg.linking import match_edges
+    from ner_spark.kg.linking import match_edges, match_edges_banding, match_edges_direct
 
     surfaces = [
         ("Acme Corporation", "ORG"),
@@ -194,13 +194,13 @@ def test_match_edges_direct_equals_banding_path(spark):
         "surface string, label string, n_mentions long",
     ).withColumn("node_id", F.xxhash64("surface", "label"))
 
-    def edge_set(direct):
+    def edge_set(branch):
         return {
             (int(r.node_a), int(r.node_b), float(r.sim))
-            for r in match_edges(nodes, direct=direct).collect()
+            for r in branch(nodes).collect()
         }
 
-    direct, banding = edge_set(True), edge_set(False)
+    direct, banding = edge_set(match_edges_direct), edge_set(match_edges_banding)
     assert direct == banding
     assert len(direct) >= 3  # parity is non-vacuous: near-dups linked
     # the auto dispatch (11 nodes << DIRECT_LINK_MAX) picks direct
@@ -217,7 +217,7 @@ def test_match_edges_direct_plan_has_no_banding_fanout(spark):
     path keeps them (its scale machinery)."""
     from pyspark.sql import functions as F
 
-    from ner_spark.kg.linking import match_edges
+    from ner_spark.kg.linking import match_edges_banding, match_edges_direct
 
     nodes = spark.createDataFrame(
         [("Acme Corp", "ORG", 1), ("Acme Corp.", "ORG", 1)],
@@ -226,7 +226,7 @@ def test_match_edges_direct_plan_has_no_banding_fanout(spark):
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    direct_plan = plan(match_edges(nodes, direct=True))
-    banding_plan = plan(match_edges(nodes, direct=False))
+    direct_plan = plan(match_edges_direct(nodes))
+    banding_plan = plan(match_edges_banding(nodes))
     assert "Generate" not in direct_plan
     assert "Generate" in banding_plan  # the band explode

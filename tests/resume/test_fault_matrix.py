@@ -132,3 +132,18 @@ def test_stray_file_fails_validation_but_not_the_snapshot(
 
     assert not validate_stage(spark, root, "triples")
     assert _fingerprint(read_snapshot(spark, root, "triples")) == gold_fp["triples"]
+
+
+def test_truncated_file_fails_validation(spark, gold, tmp_path):
+    """A committed parquet file cut to half its size (a torn rewrite
+    or disk damage) makes validation return False instead of failing
+    the parquet read."""
+    gold_root, _ = gold
+    root = str(tmp_path / "kg_root")
+    shutil.copytree(gold_root, root)
+    victim = sorted(glob.glob(os.path.join(root, "triples", "part=0", "*.parquet")))[0]
+    with open(victim, "r+b") as f:
+        f.truncate(os.path.getsize(victim) // 2)
+
+    assert not validate_stage(spark, root, "triples")
+    assert validate_all(spark, root)["triples"] is False
