@@ -1,37 +1,25 @@
 #!/usr/bin/env python
-"""Bench harness (driver contract + scaling evidence).
+"""Headline bench: the catalog's headline queries, one JSON line.
 
-Default mode: runs the headline queries at ``$SPARK_GRAFT_SF_DIR``
-(default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and
-prints exactly ONE JSON line on stdout:
+Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints
+exactly ONE JSON line on stdout:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {...}, "sf": ..., ...extras}
+     "queries": {...}, "passes": ..., "sf": ..., "cpus": ...}
 
-``--scaling``: runs the same KG workload in fresh subprocesses across
-the core configs (the sandbox stand-in for N vs 4N executors —
-BASELINE.json:2,14), computes throughput at each plus every N→4N
-efficiency, saves the results to ``SCALING_local.json``, and rewrites
-BENCH.md from all saved scaling runs.
+Kept for the external round harness that runs it; no performance
+claim rests on it.  kgbench/ (``python3 kgbench/run.py``) is the
+repo's benchmark.
 
-``--scaling --local-cluster``: same workload, but each worker runs
-on ``local-cluster[N,2,<mem>]`` — REAL separate executor JVMs (each
-with its own heap, GC, JIT, and python workers) connected to an
-in-process standalone master.  This isolates single-JVM contention
-from the engine's plan: a pair that scales here but not under
-local[N] was bounded by shared-process effects, not the job graph.
-Results land in ``SCALING_localcluster.json`` and BENCH.md shows
-both tables side by side.
-
-``--worker N [--local-cluster]``: internal — one measured KG pipeline
-run at ``local[N]`` / ``local-cluster[N/2,2,·]``.
+Usage: python bench.py  (takes no arguments)
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -57,14 +45,6 @@ HEADLINE = [
     "kg_triples",
     "kg_entities",
 ]
-
-# KG scaling workload size (turns ≈ 5.6 × convs with the Zipf mix);
-# sized so the local[32] run is compute-bound (≥ ~8s of tagging), not
-# scheduling-bound — smaller corpora under-utilize 32 cores and the
-# efficiency number measures JVM overhead instead of the engine.
-SCALING_CONVS = int(
-    os.environ.get("SPARK_GRAFT_SCALING_CONVS", "400000")
-)  # ≈ 2.1M turns default — compute-dominant so efficiency measures the engine
 
 
 def _sf_label(sf_dir: str) -> float:
@@ -97,10 +77,9 @@ def run_headline() -> None:
 
     spark = get_spark("ner_spark-bench", cores=CPUS)
     queries = headline_callables()
-    # Untimed JVM/codegen/python-worker spin-up (same rationale as the
-    # scaling bench's warmup pass: steady-state is what a long-running
-    # 100 TB job measures).  Touches NO bench table, so every query
-    # still pays its own parquet footer/IO cost.  The second statement
+    # Untimed JVM/codegen/python-worker spin-up (steady-state is what a
+    # long-running 100 TB job measures).  Touches NO bench table, so
+    # every query still pays its own parquet footer/IO cost.  The second statement
     # runs a trivial pandas UDF: a JVM-only query would leave the
     # python worker daemons unstarted and the first UDF query would
     # still pay their spin-up inside its timed window.
@@ -155,467 +134,8 @@ def run_headline() -> None:
     print(json.dumps(out))
 
 
-# local-cluster topology: 2 cores per executor JVM, so the core
-# configs map to 1/2/4/8/16 SEPARATE executor processes — "N vs 4N
-# executors" in the most literal form one box can host.  3 GiB per
-# executor: the 2.1M-turn corpus localCheckpoints to ~250 MB total
-# and the tagger state is per-worker-constant, so 16 executors stay
-# comfortably inside the box alongside the 24 GiB driver.
-LC_CORES_PER_EXEC = 2
-LC_MEM_MB = int(os.environ.get("SPARK_GRAFT_LC_MEM_MB", "3072"))
-
-
-def run_worker(cores: int, local_cluster: bool = False) -> None:
-    """One measured KG pipeline run (tag → triples → count) on a
-    deterministic transcript corpus with the pinned whale conv."""
-    from ner_spark.fixtures.transcripts import transcripts_df
-    from ner_spark.session import get_spark
-
-    master = None
-    extra: dict[str, str] = {}
-    if local_cluster:
-        if cores % LC_CORES_PER_EXEC:
-            # silently rounding would mislabel the config: the N used
-            # in throughput/efficiency math must be the cores RUN
-            raise SystemExit(
-                f"--local-cluster needs core counts divisible by "
-                f"{LC_CORES_PER_EXEC} (got {cores}); adjust "
-                f"SPARK_GRAFT_BENCH_CORES"
-            )
-        n_exec = cores // LC_CORES_PER_EXEC
-        master = f"local-cluster[{n_exec},{LC_CORES_PER_EXEC},{LC_MEM_MB}]"
-        repo_root = os.path.dirname(os.path.abspath(__file__))
-        extra = {
-            "spark.executor.memory": f"{LC_MEM_MB}m",
-            # executor JVMs spawn their own python workers; ship the
-            # repo path explicitly (the sandbox analog of --py-files)
-            "spark.executorEnv.PYTHONPATH": repo_root,
-        }
-    spark = get_spark(
-        f"ner_spark-scaling-{cores}",
-        cores=cores,
-        shuffle_partitions=2 * cores,
-        master=master,
-        extra_conf=extra,
-    )
-    t = transcripts_df(spark, SCALING_CONVS, whale=True, partitions=4 * cores)
-    t = t.localCheckpoint(eager=True)  # exclude generation from the timing
-    n_turns = t.count()
-    from pyspark.sql import Observation, functions as F
-
-    from ner_spark.kg.cooccur import extract_triples
-    from ner_spark.ner.tagger import tag_turns
-
-    def one_pass():
-        """Full pipeline in ONE Spark action: tag → triples, with the
-        turn/mention counters harvested from an Observation on the
-        tagger output instead of separate count jobs.  Round 1 ran 3
-        actions with a persist barrier between tag and the consumers;
-        the fixed per-job latency diluted the measured N→4N scaling
-        efficiency (the engine, not the job count, is what must
-        scale)."""
-        p0 = time.time()
-        obs = Observation(f"tag_stats_{p0}")
-        tagged = tag_turns(t, mode="model", salt_hot=True).observe(
-            obs,
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.size("spans")).alias("n_mentions"),
-        )
-        nt = extract_triples(tagged).count()
-        stats = obs.get
-        return int(stats["n_mentions"]), nt, time.time() - p0
-
-    # Warmup pass (untimed): pays every one-time cost — whole-stage
-    # codegen compilation of the pair-algebra expressions (~3 min
-    # measured cold vs 6 s warm), python-worker spin-up, JIT.  The
-    # timed pass below is steady-state throughput, which is what the
-    # 10¹²-turn target runs at for hours.
-    warm = transcripts_df(spark, 2000, partitions=4 * cores)
-    extract_triples(tag_turns(warm, mode="model", salt_hot=True)).count()
-
-    n_mentions, n_triples, dt = one_pass()
-    print(
-        json.dumps(
-            {
-                "cores": cores,
-                "n_turns": n_turns,
-                "n_mentions": n_mentions,
-                "n_triples": n_triples,
-                "sec": round(dt, 3),
-                "turns_per_sec": round(n_turns / dt, 1),
-                "triples_per_sec": round(n_triples / dt, 1),
-            }
-        )
-    )
-
-
-# best-of-N: the sandbox is co-tenant, wall time swings up to 3x
-REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-
-# Core configs for --scaling: every N with 4N also present forms a
-# measured N→4N pair, and ALL pairs are reported with equal prominence
-# (summary JSON + BENCH.md).  Which pair is the headline is decided by
-# the A-PRIORI rule in _headline_pair() — a pure function of the
-# machine's core count, fixed before any measurement — never by which
-# pair happens to clear the target.
-CONFIGS = tuple(
-    int(x)
-    for x in os.environ.get("SPARK_GRAFT_BENCH_CORES", "2,4,8,16,32").split(",")
-)
-
-
-def _phys_cores() -> int:
-    """The core budget actually usable by this process (cpu AFFINITY
-    under cgroup/quota limits, not the host's raw cpu_count) — the ONE
-    number both the headline-pair selection and the emitted
-    headline_rule string report, so the recorded rule always states
-    the threshold actually applied."""
-    try:
-        return len(os.sched_getaffinity(0))
-    except AttributeError:
-        return os.cpu_count() or 32
-
-
-def _headline_pair(pairs: list[tuple[int, int]]) -> tuple[int, int]:
-    """A-priori headline selection, independent of measured results:
-    the largest N→4N pair whose 4N config's EFFECTIVE core demand
-    stays strictly below the physical core count.  A python-UDF
-    pipeline occupies one python worker AND one JVM thread per task
-    slot, so local[c] demands ~2c cores; a 4N config at or above the
-    physical count measures single-host memory-bandwidth saturation
-    (all workers share one memory subsystem), not the engine's plan —
-    on a real cluster N and 4N *executors* bring their own bandwidth.
-    On this box (32 cores): 2·8=16 < 32 → (2,8) headline; 2·16=32 ≮ 32
-    → (4,16) reported but saturated; on a 64-core host the same rule
-    would pick (4,16).  Core count comes from _phys_cores() — the same
-    value the summary's headline_rule string reports."""
-    phys = _phys_cores()
-    fits = [(a, b) for a, b in pairs if 2 * b < phys]
-    if fits:
-        return max(fits)
-    return pairs[0]
-
-
-def _one_worker(cores: int, local_cluster: bool = False) -> dict:
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = str(cores)
-    cmd = [sys.executable, os.path.abspath(__file__), "--worker", str(cores)]
-    if local_cluster:
-        cmd.append("--local-cluster")
-    proc = subprocess.run(
-        cmd,
-        capture_output=True,
-        text=True,
-        env=env,
-        timeout=1800,
-    )
-    return json.loads(proc.stdout.strip().splitlines()[-1])
-
-
-def _mode_name(local_cluster: bool) -> str:
-    return "localcluster" if local_cluster else "local"
-
-
-def _scaling_json_path(mode: str) -> str:
-    return os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), f"SCALING_{mode}.json"
-    )
-
-
-def run_scaling(local_cluster: bool = False) -> None:
-    """N vs 4N core pairs over CONFIGS (see the constant's comment for
-    which pair is the engine's headline and why the oversubscribed
-    pairs measure the hardware instead).  ``local_cluster`` swaps the
-    per-worker master for local-cluster[N,2,·] — separate executor
-    JVMs — to isolate shared-process contention from the plan."""
-    mode = _mode_name(local_cluster)
-    if local_cluster:
-        bad = [c for c in CONFIGS if c % LC_CORES_PER_EXEC]
-        if bad:
-            raise SystemExit(
-                f"--local-cluster core configs must be divisible by "
-                f"{LC_CORES_PER_EXEC}: {bad}"
-            )
-    partial = _scaling_json_path(mode) + ".partial"
-    results: dict[int, dict] = {}
-    # crash recovery: a full 5-config × 3-repeat sweep runs 30-60 min
-    # in the co-tenant sandbox.  Finished configs checkpoint to a
-    # .partial file after each config; a re-run resumes from it (the
-    # corpus is deterministic and the file is deleted on success, so
-    # it only ever holds a crashed sweep's completed configs — delete
-    # it to force a fresh sweep).
-    if os.path.isfile(partial):
-        with open(partial) as fh:
-            results = {int(k): v for k, v in json.load(fh).items()}
-        print(
-            f"[scaling:{mode}] resuming from {partial}: "
-            f"configs {sorted(results)} already measured",
-            file=sys.stderr,
-        )
-    for cores in CONFIGS:
-        if cores in results:
-            continue
-        best = None
-        for _ in range(REPEATS):
-            r = _one_worker(cores, local_cluster)
-            if best is None or r["sec"] < best["sec"]:
-                best = r
-            print(f"[scaling:{mode}] {r}", file=sys.stderr)
-        results[cores] = best
-        with open(partial, "w") as fh:
-            json.dump({str(k): v for k, v in results.items()}, fh)
-
-    def eff(lo: int, hi: int, key: str) -> float:
-        return round((results[hi][key] / results[lo][key]) / (hi / lo), 3)
-
-    pairs = [(c, 4 * c) for c in sorted(results) if 4 * c in results]
-    lo, hi = (
-        _headline_pair(pairs) if pairs else (min(results), max(results))
-    )
-    summary = {
-        "metric": f"scaling_efficiency_triples_{lo}_to_{hi}",
-        "value": eff(lo, hi, "triples_per_sec"),
-        "unit": "ratio",
-        "mode": mode,
-        "headline_rule": (
-            "largest N->4N pair with 2*(4N) < physical cores "
-            f"({_phys_cores()}); see bench._headline_pair — fixed a "
-            "priori, all pairs reported below with equal prominence"
-        ),
-        "queries": {
-            # key prefix must name the mode actually run, or a
-            # localcluster summary mislabels its configs as local[N]
-            f"{mode}{c}_{k}": results[c][k]
-            for c in sorted(results)
-            for k in ("turns_per_sec", "triples_per_sec")
-        },
-        "sf": _sf_label(SF_DIR),
-        "n_turns": results[lo]["n_turns"],
-    }
-    for a, b in pairs:
-        summary[f"efficiency_triples_{a}_to_{b}"] = eff(a, b, "triples_per_sec")
-        summary[f"efficiency_turns_{a}_to_{b}"] = eff(a, b, "turns_per_sec")
-    with open(_scaling_json_path(mode), "w") as f:
-        json.dump(
-            {"results": results, "summary": summary, "pairs": pairs}, f
-        )
-    if os.path.isfile(partial):  # the final JSON supersedes it
-        os.remove(partial)
-    _write_bench_md()
-    print(json.dumps(summary))
-
-
-def _mode_section(mode: str) -> str:
-    """Render one saved scaling run (tables + pair efficiencies)."""
-    path = _scaling_json_path(mode)
-    if not os.path.isfile(path):
-        return ""
-    with open(path) as f:
-        rec = json.load(f)
-    results = {int(k): v for k, v in rec["results"].items()}
-    summary = rec["summary"]
-    pairs = [tuple(p) for p in rec["pairs"]]
-    any_c = sorted(results)[0]
-    if mode == "localcluster":
-        title = (
-            "## local-cluster[K,2,·] — K separate executor JVMs "
-            "× 2 cores each"
-        )
-
-        def cfg(c):
-            return f"local-cluster[{max(1, c // LC_CORES_PER_EXEC)},2,·]"
-
-    else:
-        title = "## local[N] — single shared JVM"
-
-        def cfg(c):
-            return f"local[{c}]"
-
-    rows = "\n".join(
-        f"| {cfg(c)} | {2 * c} | {results[c]['turns_per_sec']:,} "
-        f"| {results[c]['triples_per_sec']:,} | {results[c]['sec']} |"
-        for c in sorted(results)
-    )
-    pair_rows = "\n".join(
-        f"| {cfg(a)} → {cfg(b)} | {2 * b} | "
-        f"**{summary[f'efficiency_triples_{a}_to_{b}']:.3f}** | "
-        f"{summary[f'efficiency_turns_{a}_to_{b}']:.3f} |"
-        for a, b in pairs
-    )
-    return f"""{title}
-
-{results[any_c]['n_turns']:,} turns, mentions
-{results[any_c]['n_mentions']:,} / triples {results[any_c]['n_triples']:,}
-— identical at every parallelism (partition-invariance contract).
-
-| config | effective demand* | turns/sec | triples/sec | wall sec |
-| --- | --- | --- | --- | --- |
-{rows}
-
-| pair | 4N effective demand | triples/sec eff | turns/sec eff |
-| --- | --- | --- | --- |
-{pair_rows}
-"""
-
-
-def _probe_section() -> str:
-    """Render the Spark-free memory-bandwidth control from
-    MEMBW_probe.json (tools/membw_probe.py), if it has been run."""
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "MEMBW_probe.json"
-    )
-    if not os.path.isfile(path):
-        return ""
-    with open(path) as f:
-        probe = {int(k): v for k, v in json.load(f)["results"].items()}
-    base = probe[min(probe)]["per_proc_chars_per_sec"]
-    rows = []
-    for k, v in sorted(probe.items()):
-        ret = v["per_proc_retention_vs_min_procs"]
-        cell = f"**{ret:.3f}**" if ret < 0.95 else f"{ret:.3f}"
-        if k == max(probe):  # the spread matters most at full load
-            cell += (
-                f" (min proc {v['min_proc']:,.0f} — "
-                f"{v['min_proc'] / base:.2f}×)"
-            )
-        rows.append(f"| {k} | {v['per_proc_chars_per_sec']:,.0f} | {cell} |")
-    rows = "\n".join(rows)
-    return f"""## Memory-bandwidth probe — the Spark-free control
-
-`tools/membw_probe.py` removes Spark, the JVM, and shuffle entirely:
-K independent OS processes (spawn, no shared pages) each run the
-EXACT pure-numpy BiLSTM-CRF kernel the pipeline's mapInPandas workers
-run (`ner/model_np.tag_batch`), BLAS pinned to 1 thread, over the
-same deterministic corpus.  Per-process retention vs 1 process
-(MEMBW_probe.json):
-
-| procs | per-proc chars/sec | retention vs 1 proc |
-| --- | --- | --- |
-{rows}
-
-With zero engine code in the loop, per-process kernel throughput
-declines as process count approaches the core count.  Any engine
-running K copies of this kernel on this box inherits exactly that
-ceiling; the decline is the shared memory subsystem, not the plan.
-"""
-
-
-def _render_bench_md() -> str:
-    """Render BENCH.md's full text from every saved SCALING_*.json
-    run plus the memory-bandwidth probe, so a re-run of any one sweep
-    keeps the whole evidence story (both mode tables + the Spark-free
-    control + the bracketed reading).  Pure — tests compare this
-    against the committed file without touching the tree."""
-    sections = [
-        s
-        for s in (
-            _mode_section("local"),
-            _mode_section("localcluster"),
-            _probe_section(),
-        )
-        if s
-    ]
-    hp = None
-    headline_val = ""
-    lp = _scaling_json_path("local")
-    if os.path.isfile(lp):
-        with open(lp) as f:
-            rec = json.load(f)
-        pairs = [tuple(p) for p in rec["pairs"]]
-        hp = _headline_pair(pairs) if pairs else None
-        if hp:
-            v = rec["summary"].get(f"efficiency_triples_{hp[0]}_to_{hp[1]}")
-            headline_val = f" = **{v:.3f}**" if v is not None else ""
-    headline_pair = (
-        f"local[{hp[0]}] → local[{hp[1]}]{headline_val}" if hp else "n/a"
-    )
-    body = "\n".join(sections)
-    md = f"""# BENCH — measured throughput and scaling evidence
-
-KG pipeline (fragment-hash layout → BiLSTM-CRF mapInPandas tagger →
-co-occurrence triples, ONE Spark action with Observation counters)
-over deterministic transcript turns (Zipf conversation sizes + pinned
-5,000-turn whale), measured end-to-end in fresh JVMs, best of
-{REPEATS} runs per config (co-tenant sandbox → noisy wall clock).
-This is the sandbox stand-in for N vs 4N executors
-(BASELINE.json:2,14): same job, same input, cores and shuffle
-partitions scaled 4×.  Two execution modes, reported side by side:
-
-- **local[N]** — one shared JVM, N task threads (+ N python workers);
-- **local-cluster[N/2,2,·]** — an in-process standalone master with
-  N/2 SEPARATE executor JVMs of 2 cores each (own heap, GC, JIT,
-  python workers): the closest one box gets to "N vs 4N executors",
-  and the control that separates single-JVM contention from the
-  engine's plan.
-
-\\* a python-UDF pipeline occupies one python worker AND one JVM
-thread per task slot: a 4N config at 2·4N ≥ 32 effective cores
-saturates this 32-core box regardless of mode.
-
-{body}
-**Reading (target ≥ 0.8, BASELINE.json):** all N→4N pairs above are
-reported with equal prominence.  The headline pair is selected by the
-A-PRIORI rule in `bench._headline_pair()` — the largest N whose 4N
-config's effective demand (2 threads/slot) stays strictly below the
-physical core count — a pure function of the machine, fixed before
-measurement, never of which pair clears the target; on this box that
-is {headline_pair}.  Pairs whose 4N config demands the whole box or
-more (4→16 = 32/32, 8→32 = 64/32) progressively measure single-host
-saturation, and the two controls bracket the explanation:
-
-- **The Spark-free probe** (above) shows the tagger kernel itself
-  loses per-process throughput as process count approaches the core
-  count, with no Spark/JVM/shuffle in the loop — the saturated
-  pairs' decline exists without the engine, and the 2×-oversubscribed
-  8→32 pair stacks scheduling loss (64 effective threads on 32
-  cores) on top of that kernel ceiling.
-- **The local-cluster control** (separate executor JVMs — own GC,
-  JIT code cache, allocator) shows NO recovery at the saturated
-  pairs: if single-JVM contention were the cause, isolating the JVMs
-  would have closed the gap.  Instead every local-cluster config
-  pays a roughly constant per-executor tax (more heaps, more JVM
-  services, broadcast per executor on one box) on top of the same
-  hardware ceiling — the mode is the isolating control, not a
-  faster engine.
-
-On a real cluster, N and 4N *executors* bring their own DRAM
-channels, which is exactly the regime the fits-in-box pair
-approximates.
-
-Regenerate: `python bench.py --scaling` and
-`python bench.py --scaling --local-cluster`
-(`SPARK_GRAFT_BENCH_CORES`/`SPARK_GRAFT_BENCH_REPEATS` to override);
-each saves SCALING_<mode>.json and re-renders this file from all
-saved runs.  Headline query timings: `python bench.py` (one JSON
-line).
-
-Headline-timing notes: `python bench.py` runs every headline query
-THREE TIMES in one session and reports the per-query MIN (the kg stage
-cache is reset between passes so both passes pay full tagging) —
-steady-state plan cost, robust to co-tenant spikes and to pass-1
-JIT/whole-stage-codegen compilation, which a long-running 100 TB job
-pays once per executor lifetime, not per query.  Within a pass the
-kg_* queries share a session stage cache (ops/kg_queries.py) exactly
-as production shares committed stage tables, so their per-query
-numbers are AMORTIZED across the family.  `PLANS.md`
-(tools/plan_audit.py) holds the formatted physical plans for every
-headline query.
-"""
-    return md
-
-
-def _write_bench_md() -> None:
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md"), "w"
-    ) as f:
-        f.write(_render_bench_md())
-
-
 if __name__ == "__main__":
-    lc = "--local-cluster" in sys.argv
-    if "--worker" in sys.argv:
-        run_worker(int(sys.argv[sys.argv.index("--worker") + 1]), lc)
-    elif "--scaling" in sys.argv:
-        run_scaling(lc)
-    else:
-        run_headline()
+    # No options: an unknown argument (such as an old ``--scaling``)
+    # must fail here, before Spark starts, not run the headline instead.
+    argparse.ArgumentParser().parse_args()
+    run_headline()

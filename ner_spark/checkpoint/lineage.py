@@ -219,8 +219,10 @@ def commit_stage(
     # Stats over EXACTLY the buckets this commit computed — a positive
     # filter on (valid − done), not merely "everything not committed",
     # so nothing outside this run's write set can earn a lineage row.
-    # Partition pruning keeps the scan to the recomputed buckets.
-    written = spark.read.parquet(data_dir).filter(
+    # Partition pruning keeps the scan to the recomputed buckets.  Both
+    # read-backs pass the schema: a commit with no rows leaves no
+    # parquet file to infer it from.
+    written = spark.read.schema(bucketed.schema).parquet(data_dir).filter(
         F.col("part").isin(sorted(valid - done))
     )
     stats = (
@@ -252,7 +254,7 @@ def commit_stage(
     # committed table state (S2's snapshot-pinned read contract).
     record_snapshot(root, stage, n_buckets, kept, bucketed.schema.json())
 
-    return spark.read.parquet(data_dir).drop("part")
+    return spark.read.schema(bucketed.schema).parquet(data_dir).drop("part")
 
 
 def validate_stage(spark: SparkSession, root: str, stage: str) -> bool:
@@ -269,6 +271,8 @@ def validate_stage(spark: SparkSession, root: str, stage: str) -> bool:
     on_disk = {f: v for p in parts for f, v in _bucket_files(data_dir, p).items()}
     if on_disk != {f: v for r in rows for f, v in r["files"].items()}:
         return False
+    if not rows:  # an empty commit: no parquet file to read
+        return True
     data = spark.read.parquet(data_dir)
     cols = [c for c in data.columns if c != "part"]
     actual = (

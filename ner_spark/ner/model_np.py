@@ -268,22 +268,3 @@ def viterbi_brute(emit_1: np.ndarray, trans: np.ndarray) -> list[int]:
         if s > best_score:
             best, best_score = list(path), s
     return best
-
-
-def tag_batch(
-    char_seqs: list[list[str]],
-    vocab: dict[str, int],
-    p: dict,
-    tags: tuple[str, ...] = BIO_TAGS,
-) -> list[list[str]]:
-    """C2–C8 fused: char seqs → tag strings (BIO default; pass
-    BMES_TAGS with a BMES-trained parameter dict for the C9 scheme)."""
-    if not char_seqs:
-        return []
-    nonempty = [s for s in char_seqs if s]
-    if not nonempty:
-        return [[] for _ in char_seqs]
-    ids, lengths = encode_batch(char_seqs, vocab)
-    emit = emissions(ids, lengths, p)
-    paths = viterbi_batch(emit, lengths, p["trans"])
-    return [[tags[k] for k in path] for path in paths]

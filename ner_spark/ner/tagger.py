@@ -39,6 +39,10 @@ from ner_spark.ner.decode import (
 )
 from ner_spark.ner.train_np import BMES_MODEL_PATH, MODEL_PATH, load_or_train
 
+# Tagger modes: the BiLSTM-CRF with BIO or BMES labels, or the
+# gazetteer matcher emitting spans directly or through the BMES codec.
+MODES = ("model", "model_bmes", "gazetteer", "gazetteer_bmes")
+
 MENTION_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -241,8 +245,11 @@ def tag_turns(
 
     ``salt_hot=True`` lays turns out by the turn-block fragment key
     (ner_spark.kg.skew.salted_repartition) instead of by conv_id, so
-    hot conversations split across tasks.
+    hot conversations split across tasks.  An unknown ``mode`` raises
+    ValueError here, on the driver.
     """
+    if mode not in MODES:
+        raise ValueError(f"unknown tagger mode {mode!r}; expected one of {MODES}")
     df = transcripts.select("conv_id", "turn_idx", "text")
     # 4 tasks per core: conversation sizes are Zipf, so 1-task-per-core
     # leaves a straggler tail (measured ~30% idle time); finer tasks

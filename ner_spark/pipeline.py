@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ner_spark.fixtures.transcripts import transcripts_df
 from ner_spark.io.read import table
 from ner_spark.kg.cooccur import extract_triples
-from ner_spark.ner.tagger import mentions_from_turns, tag_turns
+from ner_spark.ner.tagger import MODES, mentions_from_turns, tag_turns
 
 
 def transcripts_for_sf(
@@ -102,7 +102,7 @@ def main(argv: list[str] | None = None) -> None:
 
         spark-submit --py-files ner_spark.zip -m ner_spark.pipeline \\
             --input <transcripts path-or-iceberg-table> \\
-            --root <output root> [--mode model|gazetteer]
+            --root <output root> [--mode model|model_bmes|gazetteer|gazetteer_bmes]
 
     Resumable: committed buckets are skipped (checkpoint/resume.py).
     """
@@ -115,7 +115,7 @@ def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--root", required=True)
-    ap.add_argument("--mode", default="model")
+    ap.add_argument("--mode", default="model", choices=MODES)
     args = ap.parse_args(argv)
 
     spark = SparkSession.getActiveSession() or get_spark("ner_spark-pipeline")

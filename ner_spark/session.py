@@ -26,19 +26,12 @@ def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    master: str | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     ``shuffle_partitions`` defaults to 2×cores locally; on a real
     cluster set it high (e.g. 2×total-cores) and let AQE coalesce —
     partition sizing policy per SURVEY.md §4.3.
-
-    ``master`` overrides the default ``local[cores]`` (used by the
-    scaling bench's ``local-cluster[N,C,M]`` mode — real separate
-    executor JVMs on one box; ``cores`` should then be the TOTAL core
-    count so parallelism-derived defaults still size correctly).
-    Ignored under spark-submit (the launcher's master wins, see below).
     """
     cores = cores or default_parallelism()
     shuffle = shuffle_partitions or max(2 * cores, 8)
@@ -71,7 +64,7 @@ def get_spark(
     # master with local[N] (tests/resume/test_spark_submit.py asserts
     # the effective master end-to-end).
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        b = b.master(master or f"local[{cores}]")
+        b = b.master(f"local[{cores}]")
     b = (
         b.config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle))
@@ -101,9 +94,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

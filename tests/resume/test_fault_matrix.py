@@ -14,7 +14,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from ner_spark.checkpoint.lineage import (
+    lineage_rows,
     read_snapshot,
+    snapshots,
     validate_stage,
     with_bucket,
 )
@@ -147,3 +149,25 @@ def test_truncated_file_fails_validation(spark, gold, tmp_path):
 
     assert not validate_stage(spark, root, "triples")
     assert validate_all(spark, root)["triples"] is False
+
+
+def test_empty_stages_commit_validate_and_rerun(spark, tmp_path):
+    """Turns with no gazetteer entity commit empty mentions and triples
+    stages: the commit, validation and a rerun (a no-op: no new row or
+    manifest) all succeed."""
+    root = str(tmp_path / "kg_root")
+    t = spark.createDataFrame(
+        [("c0", 0, "你好"), ("c0", 1, "谢谢")],
+        "conv_id string, turn_idx int, text string",
+    )
+    out = run_resumable(spark, t, root, mode="gazetteer", n_buckets=4)
+    assert out["mentions"].count() == out["triples"].count() == 0
+    assert validate_all(spark, root) == {s: True for s in STAGES}
+
+    def commit_log():
+        return {s: (lineage_rows(root, s), snapshots(root, s)) for s in STAGES}
+
+    before = commit_log()
+    run_resumable(spark, t, root, mode="gazetteer", n_buckets=4)
+    assert commit_log() == before
+    assert validate_all(spark, root) == {s: True for s in STAGES}

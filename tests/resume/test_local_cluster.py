@@ -1,10 +1,10 @@
 """North-rule clause "multi-executor cluster": the closest one box
 gets is Spark's local-cluster master — an in-process standalone
 master with REAL separate executor JVMs (own heap/GC/python workers).
-bench.py --scaling --local-cluster uses it for the N-vs-4N evidence;
-this test pins that the mode actually runs the pipeline on multiple
-executor processes and produces the same results as local mode
-(execution-topology invariance).
+This test pins that the tagger runs on multiple executor processes
+and produces the same results as local mode (execution-topology
+invariance).  ``spark.master`` goes through ``extra_conf``, which
+get_spark applies after its default ``local[cores]`` master.
 
 Runs in a subprocess: one JVM holds one SparkContext, and the
 session-scoped pytest fixture already owns a local[,] context here.
@@ -28,8 +28,8 @@ from ner_spark.ner.tagger import tag_mentions
 spark = get_spark(
     "lc-test",
     cores=2,
-    master="local-cluster[2,1,1024]",
     extra_conf={
+        "spark.master": "local-cluster[2,1,1024]",
         "spark.executor.memory": "1024m",
         "spark.executorEnv.PYTHONPATH": %(repo)r,
     },

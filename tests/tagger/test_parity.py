@@ -13,7 +13,7 @@ from ner_spark.fixtures.transcripts import (
     transcripts_pdf,
 )
 from ner_spark.ner.oracle import oracle_mentions, span_prf
-from ner_spark.ner.tagger import tag_mentions
+from ner_spark.ner.tagger import tag_mentions, tag_turns
 
 KEY = ["conv_id", "turn_idx", "start", "end", "surface", "label"]
 N_CONVS = 120
@@ -124,3 +124,10 @@ def test_mention_id_stable(spark):
         "mention_id"
     ).toPandas()
     assert sorted(a["mention_id"]) == sorted(b["mention_id"])
+
+
+def test_unknown_mode_raises_on_the_driver(spark):
+    """A misspelt mode fails when the plan is built, instead of
+    silently tagging with the gazetteer."""
+    with pytest.raises(ValueError, match="modle"):
+        tag_turns(transcripts_df(spark, 2), mode="modle")
