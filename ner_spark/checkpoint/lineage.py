@@ -20,8 +20,9 @@ implements the documented parquet fallback behind the same interface:
   fileset (relative path → [size, mtime_ns]) scanned right after the
   write;
 - resume = anti-join (operator J6) of the input's buckets against
-  committed lineage buckets — only missing buckets recompute, and
-  partition pruning keeps committed buckets unread;
+  ``committed_buckets`` — run_resumable drops committed buckets' rows
+  before the tagger, so only missing buckets recompute, and partition
+  pruning keeps committed buckets out of the commit's stats read;
 - the snapshot manifest ``_snapshots/<stage>/snap-<id>.json`` is a
   projection of the committed rows: the union of their filesets,
   appended (monotonic ids, each carrying its parent id — a linear
@@ -118,11 +119,14 @@ def committed_buckets(
     given, only rows committed UNDER THAT SAME bucket domain count: a
     bucket written at a different n_buckets holds different rows for
     the same id (pmod(h, 64) == 3 is not pmod(h, 8) == 3), so a domain
-    change invalidates every prior bucket."""
+    change invalidates every prior bucket.  The one rule for what a
+    resume may keep: commit_stage skips exactly these buckets, and
+    run_resumable feeds each stage only rows outside them."""
     return [
         int(r["part"])
         for r in lineage_rows(root, stage)
-        if n_buckets is None or r["n_buckets"] == n_buckets
+        if n_buckets is None
+        or (r["n_buckets"] == n_buckets and 0 <= r["part"] < n_buckets)
     ]
 
 
@@ -183,12 +187,10 @@ def commit_stage(
     data_dir = os.path.join(root, stage)
     valid = set(range(n_buckets))
     rows = lineage_rows(root, stage)
-    kept = (
-        [r for r in rows if r["n_buckets"] == n_buckets and r["part"] in valid]
-        if resume
-        else []
+    done = (
+        set(committed_buckets(spark, root, stage, n_buckets)) if resume else set()
     )
-    done = {r["part"] for r in kept}
+    kept = [r for r in rows if r["part"] in done]
     # Drop stale on-disk state BEFORE writing: dynamic overwrite only
     # replaces partitions present in this run's output, so a leftover
     # ``part=k`` dir from a prior run (different n_buckets, or a torn

@@ -4,11 +4,29 @@ with lineage; a restart recomputes ONLY missing/invalid buckets
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ner_spark.checkpoint.lineage import commit_stage, validate_stage
+from ner_spark.checkpoint.lineage import (
+    commit_stage,
+    committed_buckets,
+    validate_stage,
+    with_bucket,
+)
 from ner_spark.kg.cooccur import extract_triples
 from ner_spark.ner.tagger import mentions_from_turns, tag_turns
+
+
+def _lost(df: DataFrame, root: str, stage: str, n_buckets: int) -> DataFrame:
+    """``df``'s rows whose bucket has no ``stage`` row committed under
+    ``n_buckets``."""
+    done = committed_buckets(None, root, stage, n_buckets)
+    if not done:
+        return df
+    return (
+        with_bucket(df, n_buckets)
+        .filter(~F.col("part").isin(done))
+        .drop("part")
+    )
 
 
 def run_resumable(
@@ -24,16 +42,23 @@ def run_resumable(
     committed, some not) recomputes only the missing buckets and
     yields byte-identical tables; rerunning after success is a no-op
     read.  Duplicate input rows (at-least-once sources) are dropped
-    deterministically before tagging (operator O6)."""
+    deterministically before tagging (operator O6).
+
+    The tagger sees only turns whose bucket has no committed
+    ``tagged_turns`` row under ``n_buckets``; mentions and triples are
+    derived only from the committed turns of buckets missing their own
+    row.  Filtering before each stage is exact: the bucket is
+    ``pmod(xxhash64(conv_id), n_buckets)`` and the triples window is
+    per conv_id."""
     clean = transcripts.dropDuplicates(["conv_id", "turn_idx"])
 
-    tagged = tag_turns(clean, mode=mode)
+    tagged = tag_turns(_lost(clean, root, "tagged_turns", n_buckets), mode=mode)
     tagged_c = commit_stage(tagged, root, "tagged_turns", n_buckets)
 
-    mentions = mentions_from_turns(tagged_c)
+    mentions = mentions_from_turns(_lost(tagged_c, root, "mentions", n_buckets))
     mentions_c = commit_stage(mentions, root, "mentions", n_buckets)
 
-    triples = extract_triples(tagged_c)
+    triples = extract_triples(_lost(tagged_c, root, "triples", n_buckets))
     triples_c = commit_stage(triples, root, "triples", n_buckets)
     return {
         "tagged_turns": tagged_c,

@@ -11,7 +11,13 @@ Scale design:
 - layout: ``repartition(N, salt(conv_id))`` then
   ``sortWithinPartitions(conv_id, turn_idx)`` — the O2 ordering
   invariant; salting splits hot conversations (safe: tagging is
-  per-turn) via ner_spark.kg.skew.
+  per-turn) via ner_spark.kg.skew.  N defaults to one wave of tasks
+  (``defaultParallelism``): every Python task pays a fixed worker cost
+  (0.2–0.25 s on a shared 4-vCPU host at local[2], 0.13–0.24 s of it
+  in pyspark's per-task ``importlib.invalidate_caches()``, which
+  re-reads the 16 zip archives cached on ``sys.path``), so on 50 to
+  52,723 turns at local[2] one wave tagged faster than 4 tasks per
+  slot.
 - the UDF emits a narrow schema (no ``text``) so the biggest column
   dies at the tagger boundary (column pruning can't see through a
   UDF, so we prune by hand).
@@ -251,11 +257,12 @@ def tag_turns(
     if mode not in MODES:
         raise ValueError(f"unknown tagger mode {mode!r}; expected one of {MODES}")
     df = transcripts.select("conv_id", "turn_idx", "text")
-    # 4 tasks per core: conversation sizes are Zipf, so 1-task-per-core
-    # leaves a straggler tail (measured ~30% idle time); finer tasks
-    # let the scheduler rebalance.
-    parts = num_partitions or (
-        4 * transcripts.sparkSession.sparkContext.defaultParallelism
+    # One wave, a task per slot: the fixed per-task Python worker cost
+    # (module docstring) outweighed the straggler rebalancing of 4
+    # tasks per slot on every measured input.
+    parts = (
+        num_partitions
+        or transcripts.sparkSession.sparkContext.defaultParallelism
     )
     if salt_hot:
         # imported at call time so kgbench's traced run sees the

@@ -37,11 +37,12 @@ def _transcripts(spark, sf_dir):
 
 def _parts_for_cap(spark, cap: int = _CAP) -> int:
     """Task sizing for the CAPPED gate corpus (~5.6 turns/conv): aim
-    ~64 turns per task but never fewer tasks than cores.  The
-    production default (4× parallelism inside tag_turns) is right for
-    an uncapped 100 TB corpus; at ~1,700 turns it means 128 tasks of
-    ~13 rows — measured 2.3–4.4 s of pure scheduling/worker-init
-    against 1.0 s at one-wave task counts."""
+    ~64 turns per task, between one and four tasks per core.  It dates
+    from when tag_turns defaulted to 4× parallelism, which at ~1,700
+    turns on 32 cores meant 128 tasks of ~13 rows — measured 2.3–4.4 s
+    of pure scheduling/worker-init against 1.0 s at one-wave task
+    counts.  tag_turns now defaults to one wave (defaultParallelism
+    tasks); the catalog keeps this explicit count unchanged."""
     par = spark.sparkContext.defaultParallelism
     est_turns = int(cap * 5.6)
     return max(min(4 * par, est_turns // 64 or 1), par)

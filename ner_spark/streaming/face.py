@@ -123,7 +123,7 @@ def stream_mentions_foreach_batch(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        tagged = tag_turns(batch_df, mode=mode, num_partitions=8)
+        tagged = tag_turns(batch_df, mode=mode)
         commit_stage(
             tagged, root, f"stream_tagged/batch={batch_id}", n_buckets=8
         )

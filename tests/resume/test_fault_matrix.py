@@ -1,8 +1,9 @@
 """Fault-injection matrix for the commit/resume path: each case leaves a
 root in the on-disk state a crash (or a config change) at one write
 point would leave, reruns ``run_resumable``, and must converge to the
-uninterrupted run's per-stage (rows, xor checksum), validate clean, and
-read the full table back through the latest snapshot."""
+uninterrupted run's per-stage (rows, xor checksum), validate clean,
+read the full table back through the latest snapshot, and tag exactly
+the turns of the ``tagged_turns`` buckets the fault lost."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from ner_spark.checkpoint import resume
 from ner_spark.checkpoint.lineage import (
     lineage_rows,
     read_snapshot,
@@ -61,6 +63,29 @@ def gold(spark, transcripts, tmp_path_factory):
     return root, _snapshot_fingerprints(spark, root)
 
 
+def _counting_tagger(spark, monkeypatch):
+    """Patch run_resumable's tag_turns to count the turns it is given;
+    returns the accumulator."""
+    seen = spark.sparkContext.accumulator(0)
+    real = resume.tag_turns
+
+    def count(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    def counted(transcripts, *args, **kwargs):
+        counted_in = transcripts.mapInPandas(count, transcripts.schema)
+        return real(counted_in, *args, **kwargs)
+
+    monkeypatch.setattr(resume, "tag_turns", counted)
+    return seen
+
+
+# Each fault returns the tagged_turns buckets (of N_BUCKETS) whose
+# turns the rerun must tag: the ones without a committed row.
+
+
 def _data_without_rows(spark, t, gold_root, root):
     """Crash inside the triples commit after its data landed, while the
     first lineage row was still a half-written tmp file (so before its
@@ -71,6 +96,7 @@ def _data_without_rows(spark, t, gold_root, root):
     os.makedirs(ldir)
     with open(os.path.join(ldir, "part-00000.json.tmp"), "w") as f:
         f.write('{"stage": "trip')
+    return ()
 
 
 def _some_rows(spark, t, gold_root, root):
@@ -86,6 +112,7 @@ def _some_rows(spark, t, gold_root, root):
             os.path.join(root, "_lineage", stage),
             os.path.join(root, "_snapshots", stage),
         )
+    return (0, 3, 6)
 
 
 def _rows_without_manifest(spark, t, gold_root, root):
@@ -99,25 +126,63 @@ def _rows_without_manifest(spark, t, gold_root, root):
         snaps = sorted(glob.glob(os.path.join(root, "_snapshots", stage, "*.json")))
         assert len(snaps) == 2
         _rm(snaps[-1])
+    return ()
 
 
 def _n_buckets_changed(spark, t, gold_root, root):
     """A complete run under a different bucket domain."""
     run_resumable(spark, t, root, mode="gazetteer", n_buckets=4)
+    return tuple(range(N_BUCKETS))
+
+
+def _one_bucket_lost(spark, t, gold_root, root):
+    """A torn commit: one bucket's lineage rows are gone in every
+    stage."""
+    shutil.copytree(gold_root, root)
+    for stage in STAGES:
+        _rm(os.path.join(root, "_lineage", stage, "part-00005.json"))
+    return (5,)
+
+
+def _mentions_row_lost(spark, t, gold_root, root):
+    """Only the mentions stage lost a bucket's row: its mentions are
+    derived again from the committed turns, with no tagging."""
+    shutil.copytree(gold_root, root)
+    _rm(os.path.join(root, "_lineage", "mentions", "part-00002.json"))
+    return ()
+
+
+def _no_fault(spark, t, gold_root, root):
+    """A rerun over a complete commit."""
+    shutil.copytree(gold_root, root)
+    return ()
 
 
 @pytest.mark.parametrize(
     "fault",
-    [_data_without_rows, _some_rows, _rows_without_manifest, _n_buckets_changed],
+    [
+        _data_without_rows,
+        _some_rows,
+        _rows_without_manifest,
+        _n_buckets_changed,
+        _one_bucket_lost,
+        _mentions_row_lost,
+        _no_fault,
+    ],
     ids=lambda f: f.__name__.lstrip("_"),
 )
-def test_rerun_converges(spark, transcripts, gold, tmp_path, fault):
+def test_rerun_converges(spark, transcripts, gold, tmp_path, monkeypatch, fault):
     gold_root, gold_fp = gold
     root = str(tmp_path / "kg_root")
-    fault(spark, transcripts, gold_root, root)
+    lost = fault(spark, transcripts, gold_root, root)
+    tagged = _counting_tagger(spark, monkeypatch)
     run_resumable(spark, transcripts, root, mode="gazetteer")
     assert validate_all(spark, root) == {s: True for s in STAGES}
     assert _snapshot_fingerprints(spark, root) == gold_fp
+    turns = transcripts.dropDuplicates(["conv_id", "turn_idx"])
+    assert tagged.value == (
+        with_bucket(turns, N_BUCKETS).filter(F.col("part").isin(list(lost))).count()
+    )
 
 
 def test_stray_file_fails_validation_but_not_the_snapshot(
