@@ -108,13 +108,8 @@ def lineage_rows(root: str, stage: str) -> list[dict]:
 
 
 def committed_buckets(
-    spark: SparkSession | None,
-    root: str,
-    stage: str,
-    n_buckets: int | None = None,
+    root: str, stage: str, n_buckets: int | None = None
 ) -> list[int]:
-    # pure filesystem scan — ``spark`` is accepted (and ignorable,
-    # pass None) for interface symmetry with the other readers
     """Bucket ids with a committed lineage row.  When ``n_buckets`` is
     given, only rows committed UNDER THAT SAME bucket domain count: a
     bucket written at a different n_buckets holds different rows for
@@ -188,7 +183,7 @@ def commit_stage(
     valid = set(range(n_buckets))
     rows = lineage_rows(root, stage)
     done = (
-        set(committed_buckets(spark, root, stage, n_buckets)) if resume else set()
+        set(committed_buckets(root, stage, n_buckets)) if resume else set()
     )
     kept = [r for r in rows if r["part"] in done]
     # Drop stale on-disk state BEFORE writing: dynamic overwrite only
@@ -324,7 +319,7 @@ def resume_contract_violations(spark: SparkSession) -> int:
         victims = sorted(f for f in os.listdir(ldir) if f.endswith(".json"))
         os.remove(os.path.join(ldir, victims[0]))
         ok_detects = not validate_stage(spark, tmp, "s1")
-        n_left = len(committed_buckets(spark, tmp, "s1", n_buckets=8))
+        n_left = len(committed_buckets(tmp, "s1", n_buckets=8))
         second = checksum(commit_stage(df, tmp, "s1", n_buckets=8))
         ok_revalid = validate_stage(spark, tmp, "s1")
         ok_same = second == first

@@ -19,7 +19,7 @@ from ner_spark.ner.tagger import mentions_from_turns, tag_turns
 def _lost(df: DataFrame, root: str, stage: str, n_buckets: int) -> DataFrame:
     """``df``'s rows whose bucket has no ``stage`` row committed under
     ``n_buckets``."""
-    done = committed_buckets(None, root, stage, n_buckets)
+    done = committed_buckets(root, stage, n_buckets)
     if not done:
         return df
     return (

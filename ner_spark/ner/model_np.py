@@ -28,14 +28,9 @@ PAD_ID, UNK_ID = 0, 1
 NEG_INF = -1e9
 
 
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-x))
-
-
 def _sigmoid_inplace(x: np.ndarray) -> None:
-    """1/(1+exp(-x)) with zero allocations — the same op sequence as
-    ``_sigmoid`` (negate, exp, +1, reciprocal), so results are
-    bit-identical; it just reuses the input buffer."""
+    """1/(1+exp(-x)) with zero allocations: negate, exp, +1 and
+    reciprocal, each written back into the input buffer."""
     np.negative(x, out=x)
     np.exp(x, out=x)
     x += 1.0

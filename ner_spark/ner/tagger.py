@@ -1,17 +1,19 @@
 """Distributed mention tagger — the engine's stage 4 (SURVEY.md §3.2).
 
-``tag_mentions`` is the one entry point: transcripts DataFrame →
-mentions DataFrame.  The Python boundary is a single iterator-form
-``mapInPandas`` (operator U2): weights are deserialized from the
-broadcast ONCE per task, every Arrow batch is tagged with the batched
-numpy BiLSTM-CRF (C2–C8 fused), and one output row is emitted per
-mention.  No per-row Python anywhere (BASELINE.json:15).
+``tag_turns`` maps a transcripts DataFrame to one row per turn with
+its span array; ``mentions_from_turns`` explodes that into one row per
+mention, and ``tag_mentions`` composes the two.  The Python boundary
+is a single iterator-form ``mapInPandas`` (operator U2): weights are
+deserialized from the broadcast ONCE per task and every Arrow batch is
+tagged with the batched numpy BiLSTM-CRF (C2–C8 fused).  No per-row
+Python anywhere (BASELINE.json:15).
 
 Scale design:
-- layout: ``repartition(N, salt(conv_id))`` then
+- layout: ``repartition(N, conv_id)``, or with ``salt_hot=True``
+  ner_spark.kg.skew's salted layout, which splits hot conversations
+  by turn block (safe: tagging is per-turn); then
   ``sortWithinPartitions(conv_id, turn_idx)`` — the O2 ordering
-  invariant; salting splits hot conversations (safe: tagging is
-  per-turn) via ner_spark.kg.skew.  N defaults to one wave of tasks
+  invariant.  N defaults to one wave of tasks
   (``defaultParallelism``): every Python task pays a fixed worker cost
   (0.2–0.25 s on a shared 4-vCPU host at local[2], 0.13–0.24 s of it
   in pyspark's per-task ``importlib.invalidate_caches()``, which

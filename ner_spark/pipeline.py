@@ -79,15 +79,15 @@ def run_pipeline(
 
 
 def release_pipeline(out: dict[str, DataFrame]) -> None:
-    """Unpersist every frame ``run_pipeline`` persisted (tagged_turns
-    under materialize=True, plus nodes/match_edges/assignments).  A long-lived
-    session invoking run_pipeline per batch must release each batch's
-    dict or executor storage grows without bound — the same policy the
-    catalog's stage cache enforces via _evict_other_keys /
-    reset_stage_cache (ops/kg_queries.py)."""
-    for key in ("tagged_turns", "nodes", "match_edges", "assignments"):
-        df = out.get(key)
-        if df is not None and df.is_cached:
+    """Unpersist every cached frame in ``out`` (run_pipeline's
+    tagged_turns under materialize=True, nodes, match_edges,
+    assignments, and any frame a caller cached into the same dict).  A
+    long-lived session invoking run_pipeline per batch must release
+    each batch's dict or executor storage grows without bound; the
+    catalog's reset_stage_cache (ops/kg_queries.py) releases its stage
+    dict the same way."""
+    for df in out.values():
+        if df.is_cached:
             df.unpersist()
 
 

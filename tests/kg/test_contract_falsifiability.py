@@ -267,13 +267,13 @@ def test_salt_parity_catches_a_layout_that_drops_rows(spark):
     it: simulate by diffing the tagged frame against itself minus one
     fragment."""
     from ner_spark.fixtures.transcripts import transcripts_df
-    from ner_spark.ner.tagger import tag_turns
-    from ner_spark.ops.kg_queries import mentions_of, multiset_diff
+    from ner_spark.ner.tagger import mentions_from_turns, tag_turns
+    from ner_spark.ops.kg_queries import multiset_diff
 
     t = transcripts_df(spark, 20, whale=False)
     tagged = tag_turns(t, mode="gazetteer", num_partitions=8)
     cols = ["conv_id", "turn_idx", "start", "end", "surface", "label"]
-    a = mentions_of(tagged).select(*cols)
+    a = mentions_from_turns(tagged).select(*cols)
     assert multiset_diff(a, a).count() == 0
     dropped = a.filter("turn_idx <> 0")
     assert multiset_diff(a, dropped).count() > 0

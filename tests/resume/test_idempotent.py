@@ -72,9 +72,9 @@ def test_partial_failure_resume(spark, root):
     assert len(lineage_files) >= 3
     for f in lineage_files[:2]:
         os.remove(f)
-    before = set(committed_buckets(spark, root, "triples"))
+    before = set(committed_buckets(root, "triples"))
     out = run_resumable(spark, t, root, mode="gazetteer")
-    after = set(committed_buckets(spark, root, "triples"))
+    after = set(committed_buckets(root, "triples"))
     assert before < after
     pd.testing.assert_frame_equal(gold, _triples_pdf(out))
     assert validate_stage(spark, root, "triples")
@@ -129,7 +129,7 @@ def test_stale_partitions_not_recommitted(spark, root):
     out = commit_stage(t, root, "probe", n_buckets=8)
     # result holds exactly the input — no stale rows doubled in
     assert out.count() == t.count()
-    got = set(committed_buckets(spark, root, "probe"))
+    got = set(committed_buckets(root, "probe"))
     assert got <= set(range(8)), got
     assert validate_stage(spark, root, "probe")
     # no out-of-domain dirs survive on disk
