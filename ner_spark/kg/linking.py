@@ -9,42 +9,56 @@ entity assignment at the end is a broadcast join back onto mentions.
 Blocking is the hand-rolled deterministic MinHash banding from
 ner_spark.kg.minhash (fixed hash family, no RNG state — stable under
 any partitioning; ml.MinHashLSH was rejected for seed/partitioning
-instability, SURVEY.md §7 M4).  Surfaces are short (1–4 chars), so
-shingles are character 1+2-grams.
+instability, SURVEY.md §7 M4).  Each surface is hashed as its
+label-prefixed text ``label:surface`` in character 2-grams.
 
-Pairwise score (all JVM-side, no Python):
+Pairwise score:
     sim = 0.4 · jaccard_est + 0.4 · (1 − levenshtein/maxlen) + 0.2 · [label equal]
 with candidate pairs restricted to equal labels (so the last term is
-constant 0.2 and kept only for spec parity)."""
+constant 0.2 and kept only for spec parity).
+
+Two branches, one rule, chosen by vocabulary size alone (match_edges):
+match_edges_banding runs it in Spark (band explode, join, rejoin) for
+vocabularies of any size; match_edges_direct collects a small
+vocabulary once and runs it on the driver in numpy, because at a few
+thousand rows Spark's fixed per-plan cost dwarfs the row work."""
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ner_spark.kg.minhash import (
     N_BANDS,
-    band_hash,
+    N_PERM,
+    band_keys_np,
     lsh_candidate_pairs,
-    minhash_est_jaccard,
     minhash_signatures,
+    minhash_signatures_np,
 )
 
 SIM_THRESHOLD = 0.55
+_K = 2  # shingle width over the label-prefixed text
+_PAIR_BLOCK = 1 << 16  # candidate pairs scored per numpy pass
 
-# Vocabulary size below which match_edges runs the single broadcast
-# self-join path instead of the banding explode/join/distinct/rejoin
-# machinery (same dispatch idea as kg/cc.py's union-find threshold).
-# The direct path evaluates the SAME band-hash collision predicate
-# pairwise, so the edge set and sim values are identical — it just
-# trades O(|label block|²) pair evaluations (cheap JVM array ops over
-# PRE-computed per-node band hashes) for ~5 fewer shuffle stages.
-# Sizing: worst case (one label) is n²/2 pairs, each a 16-slot + a
-# 64-slot array comparison; at 4,096 nodes that is ≤ 8.4M pairs —
-# well under a second vectorized — while at 100k it would be 5×10⁹
-# pairs, far slower than the banding join's shuffles.  The threshold
-# sits an order of magnitude under the crossover; beyond it the
-# banding join engages automatically.
-DIRECT_LINK_MAX = 4096
+# Vocabulary size up to which match_edges runs match_edges_direct.
+# Sized by a sweep on a 4-vCPU host at local[2] over dense synthetic
+# vocabularies (2–5 gazetteer syllables, 3 labels — the worst case:
+# candidate pairs grow ~n²), a fresh process per size, both branches
+# timed as persist+count, cold / warm seconds:
+#     nodes     edges    direct       banding
+#     1,500     1,408    1.25 / 0.36   8.06 / 3.52
+#     3,000     4,912    1.57 / 0.68   9.73 / 4.91
+#     6,000    18,823    2.65 / 1.33  12.09 / 6.79
+#    12,000    71,908    5.30 / 3.50  23.01 / 16.35
+#    24,000   242,424   15.89 / 14.03 67.19 / 57.90
+# The driver won at every size; the cap is the largest size measured
+# (driver peak RSS 452 MB there).  Above it the banding join, which
+# spreads over the cluster's cores, engages.
+DIRECT_LINK_MAX = 24_000
 
 
 def surface_nodes(mentions: DataFrame) -> DataFrame:
@@ -56,12 +70,13 @@ def surface_nodes(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _vocab_sigs(nodes: DataFrame) -> DataFrame:
-    """(doc_id, sig) MinHash signatures of the vocabulary — the ONE
-    signature construction both candidate generators share (doc_id :=
-    node_id, text := label-prefixed surface), so the direct and
-    banding paths can never drift apart on k / prefix / hash family.
+def candidate_pairs(nodes: DataFrame) -> DataFrame:
+    """LSH candidate pairs (node_a < node_b, est_jaccard) of the
+    vocabulary, in Spark: doc_id := node_id, text := ``label:surface``.
 
+    The label prefix keeps blocks label-pure — a cheap trick to
+    piggyback the label into the signature; match_edges_banding's
+    explicit label equi-filter after the join makes it exact.
     balance=False: ``nodes`` is a derived post-shuffle plan (groupBy
     over mentions), already distributed — and _balance's partition
     probe would EXECUTE the upstream stages under AQE (see
@@ -70,47 +85,11 @@ def _vocab_sigs(nodes: DataFrame) -> DataFrame:
         F.col("node_id").alias("doc_id"),
         F.concat(F.col("label"), F.lit(":"), F.col("surface")).alias("text"),
     )
-    return minhash_signatures(docs, k=2, balance=False)
-
-
-def candidate_pairs(nodes: DataFrame) -> DataFrame:
-    """LSH candidate pairs between same-label surfaces.
-
-    Reuses the doc-level MinHash machinery via _vocab_sigs (the label
-    prefix keeps blocks label-pure — a cheap trick to piggyback the
-    label into the signature; the explicit label equi-filter after the
-    join makes it exact)."""
-    pairs = lsh_candidate_pairs(_vocab_sigs(nodes))
+    pairs = lsh_candidate_pairs(minhash_signatures(docs, k=_K, balance=False))
     return pairs.select(
         F.col("doc_a").alias("node_a"),
         F.col("doc_b").alias("node_b"),
         F.col("est_jaccard"),
-    )
-
-
-def _node_sigs(nodes: DataFrame) -> DataFrame:
-    """(node_id, surface, label, sig, bands): the vocabulary with its
-    MinHash signatures AND pre-computed per-band bucket hashes.  Band
-    hashes are computed ONCE PER NODE here (O(n·N_BANDS)) so the
-    pairwise collision test in match_edges_direct is a plain array
-    comparison, not O(pairs·N_BANDS) hash evaluations.  The
-    repartition on node_id is a reuse boundary: both sides of the
-    self-join read ONE materialized shuffle instead of re-running the
-    64-slot signature stage per side (same trick as
-    lsh_candidate_pairs' exchange, kg/minhash.py)."""
-    sigs = _vocab_sigs(nodes)
-    return (
-        nodes.join(sigs, nodes.node_id == sigs.doc_id)
-        .select(
-            "node_id",
-            "surface",
-            "label",
-            "sig",
-            F.array(
-                *[band_hash(F.col("sig"), bi) for bi in range(N_BANDS)]
-            ).alias("bands"),
-        )
-        .repartition(F.col("node_id"))
     )
 
 
@@ -120,41 +99,115 @@ def _score(est, lev_a_surface, lev_b_surface):
     return 0.4 * est + 0.4 * (1.0 - lev.cast("double") / maxlen) + F.lit(0.2)
 
 
+def _round_half_up(x: np.ndarray, places: int) -> np.ndarray:
+    """Spark's ``round(x, places)`` on doubles: HALF_UP applied to the
+    double's decimal string (``BigDecimal.valueOf``), so 2/64 = 0.03125
+    rounds to 0.0313 where Python's ``round`` gives 0.0312.  ``repr``
+    is the shortest round-trip string; Java 17 may print more digits,
+    which can matter only for a double within ~1e-17 of a tie."""
+    q = Decimal(1).scaleb(-places)
+    return np.array(
+        [float(Decimal(repr(v)).quantize(q, ROUND_HALF_UP)) for v in x.tolist()],
+        dtype=np.float64,
+    )
+
+
+def _levenshtein(ca, la, cb, lb) -> np.ndarray:
+    """Spark's ``levenshtein`` (code-point edit distance) of each pair
+    p of padded code-point columns ca[:la[p], p] and cb[:lb[p], p]:
+    one Wagner–Fischer row sweep, vectorized over the pairs.  Cell
+    (i, j) reads only the first i and j code points, so padding never
+    reaches a pair's own cell."""
+    prev = np.repeat(np.arange(len(cb) + 1, dtype=np.int32)[:, None], len(la), axis=1)
+    dist = lb.astype(np.int32)  # pairs whose a is empty
+    for i in range(1, len(ca) + 1):
+        cur = np.empty_like(prev)
+        cur[0] = i
+        for j in range(1, len(cb) + 1):
+            sub = prev[j - 1] + (ca[i - 1] != cb[j - 1])
+            cur[j] = np.minimum(np.minimum(prev[j], cur[j - 1]) + 1, sub)
+        done = la == i
+        dist[done] = cur[lb[done], done]
+        prev = cur
+    return dist
+
+
+def _band_pairs(label: np.ndarray, bands: np.ndarray) -> np.ndarray:
+    """Sorted unique codes ``a·n + b`` of the row pairs a < b with equal
+    label and an equal key in some band — the banding join's
+    candidate rule.  Per band, rows sort by (label, key); each run of
+    m equal rows emits its m(m−1)/2 pairs by index arithmetic."""
+    n = len(label)
+    codes = np.empty(0, dtype=np.int64)
+    for key in bands.T:
+        order = np.lexsort((key, label))
+        k, lab = key[order], label[order]
+        starts = np.flatnonzero(np.r_[True, (k[1:] != k[:-1]) | (lab[1:] != lab[:-1])])
+        size = np.diff(np.r_[starts, n])
+        pos = np.arange(n) - np.repeat(starts, size)
+        later = np.repeat(size, size) - 1 - pos  # partners after each row
+        first = np.repeat(np.arange(n), later)
+        offset = np.arange(len(first)) - np.repeat(np.cumsum(later) - later, later)
+        a, b = order[first], order[first + offset + 1]
+        codes = np.union1d(codes, np.minimum(a, b) * n + np.maximum(a, b))
+    return codes
+
+
+def _driver_edges(vocab: pd.DataFrame) -> pd.DataFrame:
+    """match_edges_banding's edges of a (node_id, surface, label)
+    pandas vocabulary, computed in numpy: the same MinHash signatures
+    and band keys (minhash_signatures_np / band_keys_np equal Spark's
+    XXH64 bit for bit), same-label pairs sharing a band key, and est /
+    sim rounded as Spark rounds them.  Pairs are scored in blocks of
+    _PAIR_BLOCK, so memory is bounded by the candidate list."""
+    vocab = vocab.dropna()  # concat with a null drops the row in Spark
+    texts = vocab["label"] + ":" + vocab["surface"]
+    long_enough = texts.str.len() >= _K  # minhash_signatures' filter
+    vocab, texts = vocab[long_enough], texts[long_enough]
+    ids = vocab["node_id"].to_numpy(dtype=np.int64)
+    edges = [pd.DataFrame({"node_a": ids[:0], "node_b": ids[:0], "sim": np.empty(0)})]
+    if len(ids) < 2:
+        return edges[0]
+    sigs = minhash_signatures_np(texts.tolist(), k=_K)
+    codes = _band_pairs(pd.factorize(vocab["label"])[0], band_keys_np(sigs))
+    est_of = _round_half_up(np.arange(N_PERM + 1) / N_PERM, 4)
+    surfaces = vocab["surface"].tolist()
+    lens = np.array([len(s) for s in surfaces], dtype=np.int64)
+    chars = np.full((lens.max(), len(ids)), -1, dtype=np.int32)
+    for r, s in enumerate(surfaces):
+        chars[: len(s), r] = [ord(c) for c in s]
+    sig32 = sigs.astype(np.int32)  # slots are < 2^31
+    for lo in range(0, len(codes), _PAIR_BLOCK):
+        ia, ib = np.divmod(codes[lo : lo + _PAIR_BLOCK], len(ids))
+        swap = ids[ia] > ids[ib]  # emit node_a < node_b, as banding does
+        ia, ib = np.where(swap, ib, ia), np.where(swap, ia, ib)
+        agree = (sig32[ia] == sig32[ib]).sum(axis=1)
+        lev = _levenshtein(chars[:, ia], lens[ia], chars[:, ib], lens[ib])
+        maxlen = np.maximum(lens[ia], lens[ib])
+        sim = 0.4 * est_of[agree] + 0.4 * (1.0 - lev / maxlen) + 0.2
+        # rounding to 6 places moves a value by at most 5e-7: round
+        # only the pairs that can end at or above the threshold
+        near = sim >= SIM_THRESHOLD - 1e-6
+        ia, ib, sim = ia[near], ib[near], _round_half_up(sim[near], 6)
+        hit = sim >= SIM_THRESHOLD
+        edges.append(
+            pd.DataFrame(
+                {"node_a": ids[ia[hit]], "node_b": ids[ib[hit]], "sim": sim[hit]}
+            )
+        )
+    return pd.concat(edges, ignore_index=True)
+
+
 def match_edges_direct(nodes: DataFrame) -> DataFrame:
-    """Small-vocabulary path: ONE broadcast self-join over the
-    signature-enriched vocabulary, with the banding candidate rule
-    (∃ band: band_hash_a == band_hash_b — the exact bucket key the
-    banding join uses, via the shared minhash.band_hash, pre-computed
-    per node in _node_sigs) evaluated pairwise.  Edge set and sim
-    values are identical to the banding path by construction
-    (parity-pinned in tests/kg/test_linking_cc.py)."""
-    e = _node_sigs(nodes)
-    a, b = e.alias("a"), e.alias("b")
-    collide = F.exists(
-        F.zip_with(
-            F.col("a.bands"), F.col("b.bands"), lambda x, y: x == y
-        ),
-        lambda eq: eq,
-    )
-    # round(…, 4) matches lsh_candidate_pairs' emitted est_jaccard
-    # exactly — the parity contract is to the banding path's OUTPUT
-    est = F.round(
-        minhash_est_jaccard(F.col("a.sig"), F.col("b.sig")), 4
-    )
-    sim = _score(est, F.col("a.surface"), F.col("b.surface"))
-    return (
-        a.join(
-            F.broadcast(b),
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.node_id") < F.col("b.node_id")),
-        )
-        .filter(collide)
-        .select(
-            F.col("a.node_id").alias("node_a"),
-            F.col("b.node_id").alias("node_b"),
-            F.round(sim, 6).alias("sim"),
-        )
-        .filter(F.col("sim") >= SIM_THRESHOLD)
+    """Small-vocabulary path: ONE Spark job (an Arrow collect of
+    node_id, surface, label), then _driver_edges on the driver.  Edge
+    set and sim values equal match_edges_banding's (parity-pinned in
+    tests/kg/test_linking_cc.py).  The edges return through
+    ``createDataFrame(pandas)``, which ships Arrow; a Python list cost
+    1.8 s against 0.3 s on first use."""
+    vocab = nodes.select("node_id", "surface", "label").toPandas()
+    return nodes.sparkSession.createDataFrame(
+        _driver_edges(vocab), "node_a long, node_b long, sim double"
     )
 
 
@@ -178,10 +231,10 @@ def match_edges_banding(nodes: DataFrame) -> DataFrame:
 
 
 def match_edges(nodes: DataFrame) -> DataFrame:
-    """(node_a, node_b, sim ≥ SIM_THRESHOLD): match_edges_direct up to
-    DIRECT_LINK_MAX nodes, else match_edges_banding (the same edges).
-    Pass a persisted vocabulary: the dispatch counts ``nodes`` and
-    either branch reads it several times."""
+    """(node_a, node_b, sim ≥ SIM_THRESHOLD): match_edges_direct (on
+    the driver) up to DIRECT_LINK_MAX nodes, else match_edges_banding
+    (in Spark) — the same edges.  Pass a persisted vocabulary: the
+    dispatch counts ``nodes`` and the branch reads it again."""
     if nodes.count() <= DIRECT_LINK_MAX:
         return match_edges_direct(nodes)
     return match_edges_banding(nodes)

@@ -234,8 +234,8 @@ def kg_contracts(spark, sf_dir):
     - ``linking_branch_parity``: the banding LSH join
       (match_edges_banding — the branch that engages above
       DIRECT_LINK_MAX and runs at 10¹² turns) emits exactly the edge
-      multiset the gate-scale direct broadcast path emits, over the
-      REAL session vocabulary.
+      multiset the gate-scale direct branch (the same rule computed
+      on the driver in numpy) emits, over the REAL session vocabulary.
 
     NOTE — eager rows: the ``lineage_resume`` and ``snapshot_pinning``
     scenarios (and the stage-cache materialization they ride on) run

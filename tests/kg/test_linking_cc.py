@@ -167,16 +167,23 @@ def test_lsh_recall_vs_exact_jaccard(spark, mention_nodes):
         assert recall >= 0.9, (recall, len(true_pairs))
 
 
-def test_match_edges_direct_equals_banding_path(spark):
-    """The size-dispatched direct (broadcast self-join) path must
-    produce EXACTLY the banding path's edges -- same pairs, same sim
-    values -- because it evaluates the same band-hash collision rule
-    pairwise (minhash.band_hash) and the same scoring expressions."""
-    from pyspark.sql import functions as F
+def syllable_vocabulary(n: int = 1000) -> list[tuple[str, str]]:
+    """n (surface, label) pairs built from the gazetteer's syllables:
+    2–4-character surfaces that share syllables, so blocking finds
+    many near-duplicates (the dense case for linking)."""
+    from ner_spark.fixtures.gazetteer import _GIVEN, _LOC_STEM, _LOC_SUFFIX, _SURNAMES
 
-    from ner_spark.kg.linking import match_edges, match_edges_banding, match_edges_direct
+    rng = random.Random(1)
+    syllables = _SURNAMES + _GIVEN + _LOC_STEM + _LOC_SUFFIX
+    seen: set[tuple[str, str]] = set()
+    while len(seen) < n:
+        surface = "".join(rng.choice(syllables) for _ in range(rng.randint(2, 4)))
+        seen.add((surface, rng.choice(["PER", "LOC", "ORG"])))
+    return sorted(seen)
 
-    surfaces = [
+
+PARITY_INPUTS = {
+    "near_dups": [
         ("Acme Corporation", "ORG"),
         ("Acme Corporatiom", "ORG"),  # near-dup of the first
         ("Acme Corp", "ORG"),
@@ -188,45 +195,77 @@ def test_match_edges_direct_equals_banding_path(spark):
         ("Clara Schumann", "PER"),
         ("Vltava", "LOC"),
         ("Vltava River", "LOC"),
-    ]
-    nodes = spark.createDataFrame(
+    ],
+    "syllables": syllable_vocabulary(),
+}
+
+
+def _vocab_frame(spark, surfaces):
+    from pyspark.sql import functions as F
+
+    return spark.createDataFrame(
         [(s, lb, 1) for s, lb in surfaces],
         "surface string, label string, n_mentions long",
     ).withColumn("node_id", F.xxhash64("surface", "label"))
 
-    def edge_set(branch):
-        return {
-            (int(r.node_a), int(r.node_b), float(r.sim))
-            for r in branch(nodes).collect()
-        }
 
-    direct, banding = edge_set(match_edges_direct), edge_set(match_edges_banding)
-    assert direct == banding
-    assert len(direct) >= 3  # parity is non-vacuous: near-dups linked
-    # the auto dispatch (11 nodes << DIRECT_LINK_MAX) picks direct
-    auto = {
-        (int(r.node_a), int(r.node_b), float(r.sim))
-        for r in match_edges(nodes).collect()
-    }
-    assert auto == direct
+def test_match_edges_direct_equals_banding_path(spark):
+    """The size-dispatched direct (driver numpy) path must produce
+    EXACTLY the banding path's edges -- same pairs, same sim values --
+    on every parity input, because it computes the same signatures,
+    band keys (Spark's XXH64) and scoring, rounded as Spark rounds."""
+    from ner_spark.kg.linking import match_edges, match_edges_banding, match_edges_direct
+
+    for name, surfaces in PARITY_INPUTS.items():
+        nodes = _vocab_frame(spark, surfaces).persist()
+
+        def edge_set(branch):
+            return {
+                (int(r.node_a), int(r.node_b), float(r.sim))
+                for r in branch(nodes).collect()
+            }
+
+        direct, banding = edge_set(match_edges_direct), edge_set(match_edges_banding)
+        assert direct == banding, name
+        assert len(direct) >= 3, name  # parity is non-vacuous: near-dups linked
+        # the auto dispatch (≤ DIRECT_LINK_MAX nodes) picks direct
+        assert edge_set(match_edges) == direct, name
+        nodes.unpersist()
 
 
-def test_match_edges_direct_plan_has_no_banding_fanout(spark):
-    """The direct path must be ONE self-join -- no banding explode
-    (Generate node) and no candidate distinct -- while the banding
-    path keeps them (its scale machinery)."""
-    from pyspark.sql import functions as F
+def test_match_edges_direct_is_one_job_and_empty_safe(spark):
+    """On a persisted vocabulary the direct branch triggers exactly one
+    Spark job (the collect); 0 nodes give an empty edge frame with the
+    banding branch's schema."""
+    from ner_spark.kg.linking import match_edges_direct
 
-    from ner_spark.kg.linking import match_edges_banding, match_edges_direct
+    nodes = _vocab_frame(spark, PARITY_INPUTS["near_dups"]).persist()
+    nodes.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("direct-branch-jobs", "match_edges_direct")
+    try:
+        match_edges_direct(nodes)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("direct-branch-jobs")) == 1
+    nodes.unpersist()
 
-    nodes = spark.createDataFrame(
-        [("Acme Corp", "ORG", 1), ("Acme Corp.", "ORG", 1)],
-        "surface string, label string, n_mentions long",
-    ).withColumn("node_id", F.xxhash64("surface", "label"))
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
+    empty = match_edges_direct(_vocab_frame(spark, []))
+    schema = empty.schema.simpleString()
+    assert schema == "struct<node_a:bigint,node_b:bigint,sim:double>"
+    assert empty.count() == 0
 
-    direct_plan = plan(match_edges_direct(nodes))
-    banding_plan = plan(match_edges_banding(nodes))
-    assert "Generate" not in direct_plan
-    assert "Generate" in banding_plan  # the band explode
+
+def test_entity_free_turn_gives_empty_outputs(spark):
+    """run_pipeline(materialize=True) over a turn with no entity: every
+    derived output (mentions onward) is empty, none raises."""
+    from ner_spark.pipeline import release_pipeline, run_pipeline
+
+    t = spark.createDataFrame(
+        [("c0", 0, "你好")], "conv_id string, turn_idx int, text string"
+    )
+    out = run_pipeline(spark, t, mode="gazetteer", materialize=True)
+    counts = {k: df.count() for k, df in out.items()}
+    release_pipeline(out)
+    assert counts.pop("tagged_turns") == 1
+    assert counts == {k: 0 for k in counts}
