@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ner_spark.kg.minhash import (
-    N_BANDS,
+    LINK_K,
     N_PERM,
     band_keys_np,
     lsh_candidate_pairs,
@@ -41,23 +41,25 @@ from ner_spark.kg.minhash import (
 )
 
 SIM_THRESHOLD = 0.55
-_K = 2  # shingle width over the label-prefixed text
 _PAIR_BLOCK = 1 << 16  # candidate pairs scored per numpy pass
 
 # Vocabulary size up to which match_edges runs match_edges_direct.
-# Sized by a sweep on a 4-vCPU host at local[2] over dense synthetic
-# vocabularies (2–5 gazetteer syllables, 3 labels — the worst case:
-# candidate pairs grow ~n²), a fresh process per size, both branches
-# timed as persist+count, cold / warm seconds:
-#     nodes     edges    direct       banding
-#     1,500     1,408    1.25 / 0.36   8.06 / 3.52
-#     3,000     4,912    1.57 / 0.68   9.73 / 4.91
-#     6,000    18,823    2.65 / 1.33  12.09 / 6.79
-#    12,000    71,908    5.30 / 3.50  23.01 / 16.35
-#    24,000   242,424   15.89 / 14.03 67.19 / 57.90
-# The driver won at every size; the cap is the largest size measured
-# (driver peak RSS 452 MB there).  Above it the banding join, which
-# spreads over the cluster's cores, engages.
+# Set from a sweep outside the benchmark: no kgbench workload has a
+# vocabulary above 4,096 (kg_flagship's has ~143 nodes), so neither
+# this cap nor the banding branch is checked end to end.  The sweep:
+# a 4-vCPU host at local[2], dense synthetic vocabularies (2–5
+# gazetteer syllables, 3 labels — the worst case: candidate pairs
+# grow ~n²), a fresh process per size, both branches timed as
+# persist+count, cold / warm seconds, equal edges at every size:
+#     nodes     edges    direct        banding
+#     1,500     1,408    1.27 / 0.48    9.01 / 3.41
+#     3,000     4,912    1.43 / 0.54    8.44 / 4.02
+#     6,000    18,823    2.29 / 1.30   11.78 / 6.20
+#    12,000    71,908    6.50 / 3.65   23.23 / 12.16
+#    24,000   242,424   20.92 / 19.10  61.82 / 55.78
+# The driver won at every size, so no crossover was found: the cap is
+# the largest size measured (driver Python peak RSS 680 MB there), not
+# a measured crossover.  Above it the banding join engages.
 DIRECT_LINK_MAX = 24_000
 
 
@@ -85,7 +87,7 @@ def candidate_pairs(nodes: DataFrame) -> DataFrame:
         F.col("node_id").alias("doc_id"),
         F.concat(F.col("label"), F.lit(":"), F.col("surface")).alias("text"),
     )
-    pairs = lsh_candidate_pairs(minhash_signatures(docs, k=_K, balance=False))
+    pairs = lsh_candidate_pairs(minhash_signatures(docs, k=LINK_K, balance=False))
     return pairs.select(
         F.col("doc_a").alias("node_a"),
         F.col("doc_b").alias("node_b"),
@@ -115,17 +117,19 @@ def _round_half_up(x: np.ndarray, places: int) -> np.ndarray:
 def _levenshtein(ca, la, cb, lb) -> np.ndarray:
     """Spark's ``levenshtein`` (code-point edit distance) of each pair
     p of padded code-point columns ca[:la[p], p] and cb[:lb[p], p]:
-    one Wagner–Fischer row sweep, vectorized over the pairs.  Cell
-    (i, j) reads only the first i and j code points, so padding never
-    reaches a pair's own cell."""
-    prev = np.repeat(np.arange(len(cb) + 1, dtype=np.int32)[:, None], len(la), axis=1)
+    one Wagner–Fischer row per code point of a, vectorized over the
+    pairs and along the row.  The row without insertions is t; the
+    insertion chain cur[j] = min(t[j], cur[j-1] + 1) is the running
+    minimum of t[j] − j, plus j.  Cell (i, j) reads only the first i
+    and j code points, so padding never reaches a pair's own cell."""
+    j = np.arange(len(cb) + 1, dtype=np.int32)[:, None]
+    prev = np.repeat(j, len(la), axis=1)
     dist = lb.astype(np.int32)  # pairs whose a is empty
     for i in range(1, len(ca) + 1):
-        cur = np.empty_like(prev)
-        cur[0] = i
-        for j in range(1, len(cb) + 1):
-            sub = prev[j - 1] + (ca[i - 1] != cb[j - 1])
-            cur[j] = np.minimum(np.minimum(prev[j], cur[j - 1]) + 1, sub)
+        t = np.empty_like(prev)
+        t[0] = i
+        t[1:] = np.minimum(prev[1:] + 1, prev[:-1] + (ca[i - 1] != cb))
+        cur = np.minimum.accumulate(t - j, axis=0) + j
         done = la == i
         dist[done] = cur[lb[done], done]
         prev = cur
@@ -162,13 +166,13 @@ def _driver_edges(vocab: pd.DataFrame) -> pd.DataFrame:
     _PAIR_BLOCK, so memory is bounded by the candidate list."""
     vocab = vocab.dropna()  # concat with a null drops the row in Spark
     texts = vocab["label"] + ":" + vocab["surface"]
-    long_enough = texts.str.len() >= _K  # minhash_signatures' filter
+    long_enough = texts.str.len() >= LINK_K  # minhash_signatures' filter
     vocab, texts = vocab[long_enough], texts[long_enough]
     ids = vocab["node_id"].to_numpy(dtype=np.int64)
     edges = [pd.DataFrame({"node_a": ids[:0], "node_b": ids[:0], "sim": np.empty(0)})]
     if len(ids) < 2:
         return edges[0]
-    sigs = minhash_signatures_np(texts.tolist(), k=_K)
+    sigs = minhash_signatures_np(texts.tolist())
     codes = _band_pairs(pd.factorize(vocab["label"])[0], band_keys_np(sigs))
     est_of = _round_half_up(np.arange(N_PERM + 1) / N_PERM, 4)
     surfaces = vocab["surface"].tolist()
@@ -177,38 +181,57 @@ def _driver_edges(vocab: pd.DataFrame) -> pd.DataFrame:
     for r, s in enumerate(surfaces):
         chars[: len(s), r] = [ord(c) for c in s]
     sig32 = sigs.astype(np.int32)  # slots are < 2^31
-    for lo in range(0, len(codes), _PAIR_BLOCK):
-        ia, ib = np.divmod(codes[lo : lo + _PAIR_BLOCK], len(ids))
-        swap = ids[ia] > ids[ib]  # emit node_a < node_b, as banding does
-        ia, ib = np.where(swap, ib, ia), np.where(swap, ia, ib)
-        agree = (sig32[ia] == sig32[ib]).sum(axis=1)
-        lev = _levenshtein(chars[:, ia], lens[ia], chars[:, ib], lens[ib])
-        maxlen = np.maximum(lens[ia], lens[ib])
-        sim = 0.4 * est_of[agree] + 0.4 * (1.0 - lev / maxlen) + 0.2
+    ia, ib = np.divmod(codes, len(ids))
+    swap = ids[ia] > ids[ib]  # emit node_a < node_b, as banding does
+    ia, ib = np.where(swap, ib, ia), np.where(swap, ia, ib)
+    # a block's Levenshtein sweep runs to its longest surfaces: block
+    # pairs within one power-of-two length class, so a long surface
+    # costs only its own pairs
+    size_class = np.frexp(np.maximum(lens[ia], lens[ib]))[1]
+    by_len = np.argsort(size_class, kind="stable")
+    ia, ib, size_class = ia[by_len], ib[by_len], size_class[by_len]
+    starts = np.union1d(
+        np.arange(0, len(ia), _PAIR_BLOCK), np.flatnonzero(np.diff(size_class)) + 1
+    )
+    for lo, hi in zip(starts, np.r_[starts[1:], len(ia)]):
+        a, b = ia[lo:hi], ib[lo:hi]
+        la, lb = lens[a], lens[b]
+        lev = _levenshtein(chars[: la.max(), a], la, chars[: lb.max(), b], lb)
+        agree = (sig32[a] == sig32[b]).sum(axis=1)
+        sim = 0.4 * est_of[agree] + 0.4 * (1.0 - lev / np.maximum(la, lb)) + 0.2
         # rounding to 6 places moves a value by at most 5e-7: round
         # only the pairs that can end at or above the threshold
         near = sim >= SIM_THRESHOLD - 1e-6
-        ia, ib, sim = ia[near], ib[near], _round_half_up(sim[near], 6)
+        a, b, sim = a[near], b[near], _round_half_up(sim[near], 6)
         hit = sim >= SIM_THRESHOLD
         edges.append(
-            pd.DataFrame(
-                {"node_a": ids[ia[hit]], "node_b": ids[ib[hit]], "sim": sim[hit]}
-            )
+            pd.DataFrame({"node_a": ids[a[hit]], "node_b": ids[b[hit]], "sim": sim[hit]})
         )
     return pd.concat(edges, ignore_index=True)
+
+
+_EDGE_SCHEMA = "node_a long, node_b long, sim double"
+
+
+def _vocab(nodes: DataFrame) -> pd.DataFrame:
+    """The vocabulary's (node_id, surface, label), collected through
+    Arrow in one Spark job."""
+    return nodes.select("node_id", "surface", "label").toPandas()
+
+
+def _edges_frame(nodes: DataFrame, vocab: pd.DataFrame) -> DataFrame:
+    """_driver_edges of ``vocab`` as a DataFrame.  ``createDataFrame``
+    of pandas ships Arrow; a Python list cost 1.8 s against 0.3 s on
+    first use."""
+    return nodes.sparkSession.createDataFrame(_driver_edges(vocab), _EDGE_SCHEMA)
 
 
 def match_edges_direct(nodes: DataFrame) -> DataFrame:
     """Small-vocabulary path: ONE Spark job (an Arrow collect of
     node_id, surface, label), then _driver_edges on the driver.  Edge
     set and sim values equal match_edges_banding's (parity-pinned in
-    tests/kg/test_linking_cc.py).  The edges return through
-    ``createDataFrame(pandas)``, which ships Arrow; a Python list cost
-    1.8 s against 0.3 s on first use."""
-    vocab = nodes.select("node_id", "surface", "label").toPandas()
-    return nodes.sparkSession.createDataFrame(
-        _driver_edges(vocab), "node_a long, node_b long, sim double"
-    )
+    tests/kg/test_linking_cc.py)."""
+    return _edges_frame(nodes, _vocab(nodes))
 
 
 def match_edges_banding(nodes: DataFrame) -> DataFrame:
@@ -233,8 +256,11 @@ def match_edges_banding(nodes: DataFrame) -> DataFrame:
 def match_edges(nodes: DataFrame) -> DataFrame:
     """(node_a, node_b, sim ≥ SIM_THRESHOLD): match_edges_direct (on
     the driver) up to DIRECT_LINK_MAX nodes, else match_edges_banding
-    (in Spark) — the same edges.  Pass a persisted vocabulary: the
-    dispatch counts ``nodes`` and the branch reads it again."""
-    if nodes.count() <= DIRECT_LINK_MAX:
-        return match_edges_direct(nodes)
-    return match_edges_banding(nodes)
+    (in Spark) — the same edges.  One Spark job picks the branch and
+    feeds the driver: a collect of at most DIRECT_LINK_MAX + 1 rows.
+    Above the cap the banding plan reads ``nodes`` again, so pass a
+    persisted vocabulary."""
+    vocab = _vocab(nodes.limit(DIRECT_LINK_MAX + 1))
+    if len(vocab) > DIRECT_LINK_MAX:
+        return match_edges_banding(nodes)
+    return _edges_frame(nodes, vocab)

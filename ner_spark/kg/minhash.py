@@ -40,6 +40,7 @@ def _balance(df: DataFrame, key: str) -> DataFrame:
 
 N_PERM = 64
 N_BANDS = 16  # 16 bands × 4 rows
+LINK_K = 2  # entity linking's shingle width, the one the driver twin hashes
 _ROWS = N_PERM // N_BANDS
 # Mersenne prime 2^31-1: (a mod p)·(x mod p) ≤ ~2^62 stays inside a
 # signed 64-bit long (ANSI mode would reject a wider product).
@@ -189,12 +190,10 @@ def _lane(acc: int, lane: int) -> int:
     return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
 
 
-def xxhash64(data: bytes, seed: int = XXH_SEED) -> int:
-    """Spark's ``xxhash64`` of one binary/UTF-8 string value (XXH64),
-    as the signed long Spark returns.  Chain columns by passing the
-    previous hash as ``seed``, as Spark does."""
-    seed &= _M64
-    n, i = len(data), 0
+def xxhash64(data: bytes) -> int:
+    """Spark's one-column ``xxhash64`` of a binary/UTF-8 string value
+    (XXH64 from seed 42), as the signed long Spark returns."""
+    seed, n, i = XXH_SEED, len(data), 0
     if n >= 32:
         v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
              (seed - _P1) & _M64]
@@ -258,15 +257,15 @@ def _perms_np() -> tuple[np.ndarray, np.ndarray]:
     return np.array(a, dtype=np.int64), np.array(b, dtype=np.int64)
 
 
-def minhash_signatures_np(texts: list[str], k: int) -> np.ndarray:
-    """(len(texts), N_PERM) int64: ``minhash_signatures``' sig of each
-    text, which must have at least ``k`` characters (the Spark side
-    filters shorter ones out)."""
+def minhash_signatures_np(texts: list[str]) -> np.ndarray:
+    """(len(texts), N_PERM) int64: ``minhash_signatures(k=LINK_K)``'
+    sig of each text, which must have at least LINK_K characters (the
+    Spark side filters shorter ones out)."""
     cache: dict[str, int] = {}
     hashes, owner = [], []
     for row, t in enumerate(texts):
-        for i in range(max(len(t) - k + 1, 1)):
-            sh = t[i : i + k]
+        for i in range(max(len(t) - LINK_K + 1, 1)):
+            sh = t[i : i + LINK_K]
             if sh not in cache:
                 cache[sh] = xxhash64(sh.encode()) % _MERSENNE
             hashes.append(cache[sh])

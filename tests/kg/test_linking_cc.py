@@ -198,6 +198,13 @@ PARITY_INPUTS = {
     ],
     "syllables": syllable_vocabulary(),
 }
+# one long surface and its near-dup (a long model_bmes span) among
+# short ones: the driver's Levenshtein must run to that length
+_LONG = "浦东新区张江高科技园区碧波路" * 12
+PARITY_INPUTS["long_surface"] = PARITY_INPUTS["near_dups"] + [
+    (_LONG, "ORG"),
+    (_LONG[:-1] + "街", "ORG"),
+]
 
 
 def _vocab_frame(spark, surfaces):
@@ -234,20 +241,23 @@ def test_match_edges_direct_equals_banding_path(spark):
 
 
 def test_match_edges_direct_is_one_job_and_empty_safe(spark):
-    """On a persisted vocabulary the direct branch triggers exactly one
-    Spark job (the collect); 0 nodes give an empty edge frame with the
-    banding branch's schema."""
+    """On a persisted vocabulary the direct branch, and match_edges
+    dispatching to it, each trigger exactly one Spark job (the
+    collect); 0 nodes give an empty edge frame with the banding
+    branch's schema."""
     from ner_spark.kg.linking import match_edges_direct
 
     nodes = _vocab_frame(spark, PARITY_INPUTS["near_dups"]).persist()
     nodes.count()
     sc = spark.sparkContext
-    sc.setJobGroup("direct-branch-jobs", "match_edges_direct")
-    try:
-        match_edges_direct(nodes)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("direct-branch-jobs")) == 1
+    for branch in (match_edges_direct, match_edges):
+        group = f"linking-jobs-{branch.__name__}"
+        sc.setJobGroup(group, branch.__name__)
+        try:
+            branch(nodes)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, group
     nodes.unpersist()
 
     empty = match_edges_direct(_vocab_frame(spark, []))

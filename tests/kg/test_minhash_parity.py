@@ -8,8 +8,9 @@ import random
 import numpy as np
 from pyspark.sql import functions as F
 
-from ner_spark.kg.linking import _round_half_up
+from ner_spark.kg.linking import _levenshtein, _round_half_up
 from ner_spark.kg.minhash import (
+    LINK_K,
     N_BANDS,
     band_hash,
     band_keys_np,
@@ -56,19 +57,19 @@ def test_xxhash64_longs_matches_spark_chained_band_keys(spark):
 
 
 def test_driver_signatures_and_band_keys_match_spark(spark):
-    """minhash_signatures_np / band_keys_np equal minhash_signatures(k=2)
+    """minhash_signatures_np / band_keys_np equal minhash_signatures(k=LINK_K)
     and band_hash for every label-prefixed surface (the linking text)."""
     texts = [f"{lab}:{s}" for s, lab in syllable_vocabulary()]
     texts += ["ORG:" + s for s in _strings()[1:40]]
     docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    sigs = minhash_signatures(docs, k=2, balance=False)
+    sigs = minhash_signatures(docs, k=LINK_K, balance=False)
     bands = sigs.select(
         "doc_id",
         "sig",
         *[F.expr(band_hash("sig", bi)).alias(f"b{bi}") for bi in range(N_BANDS)],
     )
     rows = {r.doc_id: r for r in bands.collect()}
-    want_sig = minhash_signatures_np(texts, k=2)
+    want_sig = minhash_signatures_np(texts)
     want_bands = band_keys_np(want_sig)
     assert sorted(rows) == list(range(len(texts)))
     for i in range(len(texts)):
@@ -84,3 +85,28 @@ def test_est_rounds_half_up_as_spark_does(spark):
     df = spark.range(65).select("id", F.round(F.col("id") / 64, 4).alias("est"))
     spark_est = [r.est for r in df.orderBy("id").collect()]
     assert _round_half_up(np.arange(65) / 64, 4).tolist() == spark_est
+
+
+def test_levenshtein_matches_spark(spark):
+    """_levenshtein equals Spark's levenshtein on pairs of 0–300
+    code points (multi-byte included), short and long in one call."""
+    rng = random.Random(3)
+
+    def text():
+        n = rng.choice([0, 1, 2, 3, 5, 8, 40, 300])
+        return "".join(rng.choice("ab王李😀") for _ in range(n))
+
+    pairs = [(text(), text()) for _ in range(400)]
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)], "i int, a string, b string"
+    )
+    got = {r.i: r.d for r in df.select("i", F.levenshtein("a", "b").alias("d")).collect()}
+
+    def padded(strs):
+        chars = np.full((max(map(len, strs)), len(strs)), -1, dtype=np.int32)
+        for p, s in enumerate(strs):
+            chars[: len(s), p] = [ord(c) for c in s]
+        return chars, np.array([len(s) for s in strs])
+
+    (ca, la), (cb, lb) = padded([a for a, _ in pairs]), padded([b for _, b in pairs])
+    assert _levenshtein(ca, la, cb, lb).tolist() == [got[i] for i in range(len(pairs))]
