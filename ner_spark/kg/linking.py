@@ -163,7 +163,7 @@ def _driver_edges(vocab: pd.DataFrame) -> pd.DataFrame:
     and band keys (minhash_signatures_np / band_keys_np equal Spark's
     XXH64 bit for bit), same-label pairs sharing a band key, and est /
     sim rounded as Spark rounds them.  Pairs are scored in blocks of
-    _PAIR_BLOCK, so memory is bounded by the candidate list."""
+    at most _PAIR_BLOCK, so memory is bounded by the candidate list."""
     vocab = vocab.dropna()  # concat with a null drops the row in Spark
     texts = vocab["label"] + ":" + vocab["surface"]
     long_enough = texts.str.len() >= LINK_K  # minhash_signatures' filter
