@@ -57,7 +57,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-N_BUCKETS = 32
+N_BUCKETS = 8
 LINEAGE_TABLE = "_lineage"
 SNAP_TABLE = "_snapshots"
 
@@ -313,14 +313,14 @@ def resume_contract_violations(spark: SparkSession) -> int:
             ).collect()[0]
             return int(r["n"]), int(r["cs"])
 
-        first = checksum(commit_stage(df, tmp, "s1", n_buckets=8))
+        first = checksum(commit_stage(df, tmp, "s1"))
         ok_clean = validate_stage(spark, tmp, "s1")
         ldir = _lineage_dir(tmp, "s1")
         victims = sorted(f for f in os.listdir(ldir) if f.endswith(".json"))
         os.remove(os.path.join(ldir, victims[0]))
         ok_detects = not validate_stage(spark, tmp, "s1")
-        n_left = len(committed_buckets(tmp, "s1", n_buckets=8))
-        second = checksum(commit_stage(df, tmp, "s1", n_buckets=8))
+        n_left = len(committed_buckets(tmp, "s1", N_BUCKETS))
+        second = checksum(commit_stage(df, tmp, "s1"))
         ok_revalid = validate_stage(spark, tmp, "s1")
         ok_same = second == first
         ok_partial = n_left == len(victims) - 1
@@ -525,13 +525,13 @@ def snapshot_contract_violations(spark: SparkSession) -> int:
     try:
         df = _contract_frame(spark)
         part = (
-            with_bucket(df, 8)
-            .filter(F.col("part") < 4)
+            with_bucket(df)
+            .filter(F.col("part") < N_BUCKETS // 2)
             .drop("part")
         )
         n_part, n_full = part.count(), df.count()
 
-        commit_stage(part, tmp, "s1", n_buckets=8)
+        commit_stage(part, tmp, "s1")
         ok_pin1 = read_snapshot(spark, tmp, "s1", 1).count() == n_part
 
         data_dir = os.path.join(tmp, "s1")
@@ -551,11 +551,11 @@ def snapshot_contract_violations(spark: SparkSession) -> int:
             and read_snapshot(spark, tmp, "s1").count() == n_part
         )
 
-        commit_stage(df, tmp, "s1", n_buckets=8)
+        commit_stage(df, tmp, "s1")
         ok_no_launder = read_snapshot(spark, tmp, "s1").count() == n_full
         ok_travel = read_snapshot(spark, tmp, "s1", 1).count() == n_part
 
-        commit_stage(df, tmp, "s1", n_buckets=8, resume=False)
+        commit_stage(df, tmp, "s1", resume=False)
         ok_latest = read_snapshot(spark, tmp, "s1").count() == n_full
         try:
             read_snapshot(spark, tmp, "s1", 2)

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ner_spark.checkpoint.lineage import (
+    N_BUCKETS,
     commit_stage,
     committed_buckets,
     validate_stage,
@@ -34,7 +35,7 @@ def run_resumable(
     transcripts: DataFrame,
     root: str,
     mode: str = "model",
-    n_buckets: int = 8,
+    n_buckets: int = N_BUCKETS,
 ) -> dict[str, DataFrame]:
     """transcripts → committed mentions + triples under ``root``.
 

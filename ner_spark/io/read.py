@@ -13,24 +13,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
-
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), False),
-    ]
-)
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One driver testdata table (parquet scan, operator S1)."""
@@ -102,15 +89,6 @@ def read_transcripts(
         # Plain-parquet fallback; `part=` hive-style dirs surface as a
         # column and drive partition pruning on resume (J6 path).
         return spark.read.parquet(path)
-
-
-CORPUS_SCHEMA = T.StructType(
-    [
-        T.StructField("sent_id", T.LongType(), False),
-        T.StructField("chars", T.ArrayType(T.StringType()), False),
-        T.StructField("tags", T.ArrayType(T.StringType()), False),
-    ]
-)
 
 
 def read_msra_corpus(spark: SparkSession, path: str) -> DataFrame:

@@ -36,19 +36,7 @@ CROSS_TURN_WINDOW = 2
 MAX_GAP = 30
 MAX_PRED_LEN = 12
 
-TRIPLE_COLS = [
-    "conv_id",
-    "turn_idx",
-    "subj_mention_id",
-    "obj_mention_id",
-    "subj",
-    "pred",
-    "obj",
-    "subj_type",
-    "obj_type",
-]
-
-_EMPTY_PAIRS = "array()"
+_SPAN = "struct<start:int,end:int,surface:string,label:string>"
 
 
 def _intra_pairs(ms):
@@ -83,7 +71,7 @@ def _cross_pairs(ms, other, dt_col):
         F.transform(
             ms,
             lambda a: F.transform(
-                F.coalesce(other, F.expr("array()").cast("array<struct<start:int,end:int,surface:string,label:string>>")),
+                F.coalesce(other, F.expr("array()").cast(f"array<{_SPAN}>")),
                 lambda b: F.struct(
                     a.alias("a"), b.alias("b"), dt_col.alias("dt")
                 ),
@@ -94,8 +82,7 @@ def _cross_pairs(ms, other, dt_col):
 
 
 def pairs_type() -> str:
-    span = "struct<start:int,end:int,surface:string,label:string>"
-    return f"array<struct<a:{span},b:{span},dt:int>>"
+    return f"array<struct<a:{_SPAN},b:{_SPAN},dt:int>>"
 
 
 def extract_triples(tagged_turns: DataFrame) -> DataFrame:

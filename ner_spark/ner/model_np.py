@@ -23,9 +23,7 @@ import numpy as np
 from ner_spark.ner.decode import BIO_TAGS
 
 K = len(BIO_TAGS)
-START, STOP = K, K + 1
 PAD_ID, UNK_ID = 0, 1
-NEG_INF = -1e9
 
 
 def _sigmoid_inplace(x: np.ndarray) -> None:
@@ -63,24 +61,22 @@ def encode_batch(
     lut: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Pad to batch max-len → (ids [B,T] int32, lengths [B] int32).
-    With a LUT, char→id is pure numpy (utf-32 decode + table gather)."""
+    char→id is pure numpy (utf-32 decode + table gather); pass the
+    ``vocab_lut(vocab)`` table to reuse it across batches."""
+    if lut is None:
+        lut = vocab_lut(vocab)
     B = len(char_seqs)
     lengths = np.array([len(s) for s in char_seqs], dtype=np.int32)
     T = max(1, int(lengths.max()) if B else 1)
     ids = np.zeros((B, T), dtype=np.int32)
-    if lut is not None:
-        sent = lut.shape[0] - 1
-        for i, seq in enumerate(char_seqs):
-            if not seq:
-                continue
-            cps = np.frombuffer(
-                "".join(seq).encode("utf-32-le"), dtype=np.uint32
-            ).astype(np.int64)
-            ids[i, : len(seq)] = lut[np.minimum(cps, sent)]
-    else:
-        for i, seq in enumerate(char_seqs):
-            for j, ch in enumerate(seq):
-                ids[i, j] = vocab.get(ch, UNK_ID)
+    sent = lut.shape[0] - 1
+    for i, seq in enumerate(char_seqs):
+        if not seq:
+            continue
+        cps = np.frombuffer(
+            "".join(seq).encode("utf-32-le"), dtype=np.uint32
+        ).astype(np.int64)
+        ids[i, : len(seq)] = lut[np.minimum(cps, sent)]
     return ids, lengths
 
 

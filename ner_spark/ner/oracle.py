@@ -7,31 +7,23 @@ from __future__ import annotations
 
 import pandas as pd
 
-from ner_spark.ner.tagger import (
-    _gazetteer_index,
-    gazetteer_spans,
-    tag_pdf_batch,
-)
-from ner_spark.ner.train_np import load_or_train
+from ner_spark.ner.tagger import tagger
 
 
 def oracle_mentions(transcripts: pd.DataFrame, mode: str = "model") -> pd.DataFrame:
-    """(conv_id, turn_idx, start, end, surface, label) sorted."""
-    rows = []
-    if mode == "model":
-        params, vocab = load_or_train()
-        span_lists = tag_pdf_batch(transcripts["text"].tolist(), params, vocab)
-    else:
-        idx = _gazetteer_index()
-        span_lists = [
-            [(s, e, surf, lab, 1.0) for s, e, surf, lab in gazetteer_spans(t, idx)]
-            for t in transcripts["text"].tolist()
-        ]
-    for (conv_id, turn_idx), spans in zip(
-        zip(transcripts["conv_id"], transcripts["turn_idx"]), span_lists
-    ):
-        for s, e, surf, lab, _score in spans:
-            rows.append((conv_id, int(turn_idx), s, e, surf, lab))
+    """(conv_id, turn_idx, start, end, surface, label) sorted, from the
+    mode's span function (``tagger``) — the one the distributed UDF
+    runs.  An unknown mode raises ValueError."""
+    spans_of = tagger(mode)
+    rows = [
+        (conv_id, int(turn_idx), s, e, surf, lab)
+        for conv_id, turn_idx, spans in zip(
+            transcripts["conv_id"],
+            transcripts["turn_idx"],
+            spans_of(transcripts["text"].tolist()),
+        )
+        for s, e, surf, lab in spans
+    ]
     out = pd.DataFrame(
         rows, columns=["conv_id", "turn_idx", "start", "end", "surface", "label"]
     )

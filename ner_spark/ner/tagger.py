@@ -3,10 +3,11 @@
 ``tag_turns`` maps a transcripts DataFrame to one row per turn with
 its span array; ``mentions_from_turns`` explodes that into one row per
 mention, and ``tag_mentions`` composes the two.  The Python boundary
-is a single iterator-form ``mapInPandas`` (operator U2): weights are
-deserialized from the broadcast ONCE per task and every Arrow batch is
-tagged with the batched numpy BiLSTM-CRF (C2–C8 fused).  No per-row
-Python anywhere (BASELINE.json:15).
+is a single iterator-form ``mapInPandas`` (operator U2): every Arrow
+batch goes through the mode's span function (``tagger``), the same one
+the single-process oracle runs; model weights load once per Python
+worker, and model modes tag with the batched numpy BiLSTM-CRF (C2–C8
+fused).
 
 Scale design:
 - layout: ``repartition(N, conv_id)``, or with ``salt_hot=True``
@@ -20,9 +21,8 @@ Scale design:
   re-reads the 16 zip archives cached on ``sys.path``), so on 50 to
   52,723 turns at local[2] one wave tagged faster than 4 tasks per
   slot.
-- the UDF emits a narrow schema (no ``text``) so the biggest column
-  dies at the tagger boundary (column pruning can't see through a
-  UDF, so we prune by hand).
+- the UDF reads only (conv_id, turn_idx, text) — column pruning
+  can't see through a UDF, so we prune by hand.
 - mention_id = xxhash64(conv_id, turn_idx, start, end) — a pure
   function of data, stable under retries/partitioning (never
   monotonically_increasing_id).
@@ -30,7 +30,8 @@ Scale design:
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -38,30 +39,9 @@ from pyspark.sql import types as T
 
 from ner_spark.fixtures.gazetteer import GAZETTEER
 from ner_spark.ner import model_np as M
-from ner_spark.ner.decode import (
-    BIO_TAGS,
-    BMES_TAGS,
-    decode_bio,
-    decode_bmes,
-    spans_to_bmes,
-)
-from ner_spark.ner.train_np import BMES_MODEL_PATH, MODEL_PATH, load_or_train
+from ner_spark.ner.train_np import SCHEMES, load_or_train
 
-# Tagger modes: the BiLSTM-CRF with BIO or BMES labels, or the
-# gazetteer matcher emitting spans directly or through the BMES codec.
-MODES = ("model", "model_bmes", "gazetteer", "gazetteer_bmes")
-
-MENTION_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-        T.StructField("surface", T.StringType(), False),
-        T.StructField("label", T.StringType(), False),
-        T.StructField("score", T.FloatType(), False),
-    ]
-)
+Span = tuple[int, int, str, str]  # (start, end, surface, label)
 
 SPAN_STRUCT = T.StructType(
     [
@@ -82,30 +62,19 @@ TURN_SCHEMA = T.StructType(
 
 _UDF_BATCH = 512  # numpy mini-batch inside each Arrow batch
 
+
 # Per-process caches: Spark reuses python workers across tasks
 # (spark.python.worker.reuse), so weights deserialize once per WORKER,
 # not once per task — measured to matter once tasks shrink at high
 # parallelism.
-_MODEL_CACHE: dict = {}
+@functools.cache
+def _cached_model(scheme: str):
+    """(params, vocab, codepoint LUT) of the scheme's frozen model."""
+    params, vocab = load_or_train(scheme)
+    return params, vocab, M.vocab_lut(vocab)
 
 
-def _cached_model(scheme: str = "bio"):
-    if scheme not in _MODEL_CACHE:
-        path = MODEL_PATH if scheme == "bio" else BMES_MODEL_PATH
-        _MODEL_CACHE[scheme] = load_or_train(path, scheme=scheme)
-    return _MODEL_CACHE[scheme]
-
-
-_LUT_CACHE: dict[int, "object"] = {}
-
-
-def _lut_for(vocab: dict[str, int]):
-    key = id(vocab)
-    if key not in _LUT_CACHE:
-        _LUT_CACHE[key] = M.vocab_lut(vocab)
-    return _LUT_CACHE[key]
-
-
+@functools.cache
 def _gazetteer_index() -> dict[str, list[tuple[str, str]]]:
     """first-char → [(surface, label)] sorted longest-first, for
     deterministic maximal-munch scanning."""
@@ -117,7 +86,7 @@ def _gazetteer_index() -> dict[str, list[tuple[str, str]]]:
     return idx
 
 
-def gazetteer_spans(text: str, idx) -> list[tuple[int, int, str, str]]:
+def gazetteer_spans(text: str, idx) -> list[Span]:
     """Left-to-right longest-match scan (independent of the fixture
     generator's template splicer — the two agreeing is a real check)."""
     out = []
@@ -137,29 +106,42 @@ def gazetteer_spans(text: str, idx) -> list[tuple[int, int, str, str]]:
     return out
 
 
-def tag_pdf_batch(
-    texts: list[str],
-    params: dict,
-    vocab: dict[str, int],
-    scheme: str = "bio",
-) -> list[list[tuple[int, int, str, str, float]]]:
-    """Model-mode tagging of a list of texts → per-text span lists.
-    Deterministic regardless of batch composition (per-row matmul
-    results don't depend on batch size — property-tested).  ``scheme``
-    selects the label set + decoder: "bio" (7 tags, conlleval decode)
-    or "bmes" (13 tags, decode_bmes) — C8/C9 both through the batched
-    Viterbi (the BMES transition matrix is its own trained model)."""
-    tags_tbl, decode = (
-        (BIO_TAGS, decode_bio) if scheme == "bio" else (BMES_TAGS, decode_bmes)
-    )
-    out: list[list] = [[] for _ in texts]
-    lut = _lut_for(vocab)
+def gazetteer_batch(
+    texts: list[str], scheme: str | None = None
+) -> list[list[Span]]:
+    """Gazetteer spans per text.  With a ``scheme`` the spans pass
+    through its codec (spans → tag sequence → decode), so the BMES
+    codec runs inside the distributed UDF (C9) and must round-trip to
+    the direct spans exactly."""
+    idx = _gazetteer_index()
+    if scheme is None:
+        return [gazetteer_spans(t, idx) for t in texts]
+    codec = SCHEMES[scheme]
+    out = []
+    for t in texts:
+        tags = codec.encode(
+            len(t), [(s, e, lab) for s, e, _, lab in gazetteer_spans(t, idx)]
+        )
+        out.append([(s, e, t[s:e], lab) for s, e, lab in codec.decode(tags)])
+    return out
+
+
+def tag_pdf_batch(texts: list[str], scheme: str = "bio") -> list[list[Span]]:
+    """Model-mode tagging of a list of texts → per-text span lists,
+    with the scheme's frozen BiLSTM-CRF, tag set and decoder: "bio"
+    (7 tags, conlleval decode) or "bmes" (13 tags, decode_bmes) —
+    C8/C9 both through the batched Viterbi (the BMES transition matrix
+    is its own trained model).  A text's spans do not depend on the
+    batch it is tagged in (tests/tagger/test_batch.py)."""
+    params, vocab, lut = _cached_model(scheme)
+    codec = SCHEMES[scheme]
+    out: list[list[Span]] = [[] for _ in texts]
     todo = [(i, list(t)) for i, t in enumerate(texts) if t]
     # Sort by length before chunking: each numpy mini-batch pads to its
     # own max length, cutting padded-FLOP waste (the reference family's
     # batch_yield sorts by length for the same reason).  Stable sort ⇒
-    # deterministic; per-row results are batch-composition independent
-    # (property-tested), so this is purely a throughput knob.
+    # deterministic; per-row results are batch-composition independent,
+    # so this is purely a throughput knob.
     todo.sort(key=lambda p: len(p[1]))
     for lo in range(0, len(todo), _UDF_BATCH):
         chunk = todo[lo : lo + _UDF_BATCH]
@@ -167,63 +149,45 @@ def tag_pdf_batch(
         emit = M.emissions(ids, lengths, params)
         paths = M.viterbi_batch(emit, lengths, params["trans"])
         for (row_i, chars), path in zip(chunk, paths):
-            tags = [tags_tbl[k] for k in path]
-            for s, e, lab in decode(tags):
-                surface = "".join(chars[s:e])
-                out[row_i].append((s, e, surface, lab, 1.0))
+            tags = [codec.tags[k] for k in path]
+            for s, e, lab in codec.decode(tags):
+                out[row_i].append((s, e, "".join(chars[s:e]), lab))
     return out
 
 
+# Tagger modes: the BiLSTM-CRF read out in BIO or BMES labels, or the
+# gazetteer matcher emitting spans directly or through the BMES codec.
+MODES = {
+    "model": functools.partial(tag_pdf_batch, scheme="bio"),
+    "model_bmes": functools.partial(tag_pdf_batch, scheme="bmes"),
+    "gazetteer": gazetteer_batch,
+    "gazetteer_bmes": functools.partial(gazetteer_batch, scheme="bmes"),
+}
+
+
+def tagger(mode: str) -> Callable[[list[str]], list[list[Span]]]:
+    """The mode's span function: texts → per-text [(start, end,
+    surface, label)].  The distributed UDF and the single-process
+    oracle both tag through it.  An unknown mode raises ValueError."""
+    try:
+        return MODES[mode]
+    except KeyError:
+        raise ValueError(
+            f"unknown tagger mode {mode!r}; expected one of {tuple(MODES)}"
+        ) from None
+
+
 def _tagger_fn(mode: str):
-    """Iterator mapInPandas closure: init once per task, then stream
-    Arrow batches.  Emits ONE ROW PER TURN with the span array — the
+    """Iterator mapInPandas closure: look the mode's span function up
+    once per task, then stream Arrow batches.  Emits ONE ROW PER TURN with the span array — the
     compact form both downstream shapes derive from (mentions =
     explode; triples = window over per-turn arrays, no joins)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if mode == "model":
-            params, vocab = _cached_model("bio")
-        elif mode == "model_bmes":
-            params, vocab = _cached_model("bmes")
-        else:
-            idx = _gazetteer_index()
+        spans_of = tagger(mode)
         cols = [f.name for f in TURN_SCHEMA.fields]
         for pdf in batches:
             texts = pdf["text"].tolist()
-            if mode == "model":
-                span_lists = tag_pdf_batch(texts, params, vocab)
-            elif mode == "model_bmes":
-                # C9 through the MODEL path: BMES-trained BiLSTM-CRF →
-                # 13-tag batched Viterbi → decode_bmes, all inside the
-                # distributed UDF (pytest: spans == the BIO model's)
-                span_lists = tag_pdf_batch(
-                    texts, params, vocab, scheme="bmes"
-                )
-            elif mode == "gazetteer_bmes":
-                # BMES label-scheme path (C9, BASELINE "BIO/BMES"):
-                # spans → BMES tag sequence → decode_bmes, so the BMES
-                # codec runs inside the distributed UDF; round-trips to
-                # the BIO-path spans exactly (pytest parity).
-                span_lists = []
-                for t in texts:
-                    tag_seq = spans_to_bmes(
-                        len(t),
-                        [
-                            (s, e, lab)
-                            for s, e, _surf, lab in gazetteer_spans(t, idx)
-                        ],
-                    )
-                    span_lists.append(
-                        [
-                            (s, e, t[s:e], lab, 1.0)
-                            for s, e, lab in decode_bmes(tag_seq)
-                        ]
-                    )
-            else:
-                span_lists = [
-                    [(s, e, surf, lab, 1.0) for s, e, surf, lab in gazetteer_spans(t, idx)]
-                    for t in texts
-                ]
             rows = [
                 (
                     conv_id,
@@ -231,11 +195,11 @@ def _tagger_fn(mode: str):
                     text,
                     [
                         {"start": s, "end": e, "surface": surf, "label": lab}
-                        for s, e, surf, lab, _score in spans
+                        for s, e, surf, lab in spans
                     ],
                 )
                 for conv_id, turn_idx, text, spans in zip(
-                    pdf["conv_id"], pdf["turn_idx"], texts, span_lists
+                    pdf["conv_id"], pdf["turn_idx"], texts, spans_of(texts)
                 )
             ]
             yield pd.DataFrame(rows, columns=cols)
@@ -256,8 +220,7 @@ def tag_turns(
     hot conversations split across tasks.  An unknown ``mode`` raises
     ValueError here, on the driver.
     """
-    if mode not in MODES:
-        raise ValueError(f"unknown tagger mode {mode!r}; expected one of {MODES}")
+    tagger(mode)  # fail on the driver, not in a task
     df = transcripts.select("conv_id", "turn_idx", "text")
     # One wave, a task per slot: the fixed per-task Python worker cost
     # (module docstring) outweighed the straggler rebalancing of 4
@@ -292,6 +255,7 @@ def mentions_from_turns(tagged_turns: DataFrame) -> DataFrame:
             F.col("sp.end").alias("end"),
             F.col("sp.surface").alias("surface"),
             F.col("sp.label").alias("label"),
+            # the tagger scores no span; kg_mentions' schema keeps it
             F.lit(1.0).cast("float").alias("score"),
         )
         .withColumn(

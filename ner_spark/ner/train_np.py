@@ -22,6 +22,7 @@ oracle run of this model defines the reference spans).
 from __future__ import annotations
 
 import os
+from typing import Callable, NamedTuple
 
 import numpy as np
 
@@ -32,21 +33,37 @@ from ner_spark.ner.decode import (
     BIO_TAGS,
     BMES_TAG2ID,
     BMES_TAGS,
+    decode_bio,
+    decode_bmes,
     spans_to_bio,
     spans_to_bmes,
 )
 
-MODEL_PATH = os.path.join(os.path.dirname(__file__), "model_tiny.npz")
-# C9 through the model path: same architecture, 13-tag BMES label set
-# with its own trained transitions/projection (BASELINE "BIO/BMES via
-# batched Viterbi").
-BMES_MODEL_PATH = os.path.join(
-    os.path.dirname(__file__), "model_tiny_bmes.npz"
-)
 
+class Scheme(NamedTuple):
+    """One label scheme: its tag set, the span ↔ tag-sequence codec
+    and the frozen model trained in it."""
+
+    tags: tuple[str, ...]
+    tag2id: dict[str, int]
+    encode: Callable  # (n, [(start, end, label)]) → tags
+    decode: Callable  # tags → [(start, end, label)]
+    path: str
+
+
+_HERE = os.path.dirname(__file__)
+# C9 through the model path: the BMES model has the same architecture
+# with its own 13-tag transitions/projection (BASELINE "BIO/BMES via
+# batched Viterbi").
 SCHEMES = {
-    "bio": (BIO_TAGS, BIO_TAG2ID, spans_to_bio),
-    "bmes": (BMES_TAGS, BMES_TAG2ID, spans_to_bmes),
+    "bio": Scheme(
+        BIO_TAGS, BIO_TAG2ID, spans_to_bio, decode_bio,
+        os.path.join(_HERE, "model_tiny.npz"),
+    ),
+    "bmes": Scheme(
+        BMES_TAGS, BMES_TAG2ID, spans_to_bmes, decode_bmes,
+        os.path.join(_HERE, "model_tiny_bmes.npz"),
+    ),
 }
 
 # capacity chosen empirically: converges to 0 training errors in ~7
@@ -83,7 +100,7 @@ def init_params(
 def _train_sentences(n_convs: int = 400, scheme: str = "bio"):
     """Fixture corpus → [(chars, gold_tag_ids)] in the scheme's label
     set."""
-    _tags, tag2id, spans_to = SCHEMES[scheme]
+    codec = SCHEMES[scheme]
     turns, gold = transcripts_pdf(n_convs, tier="correctness")
     by_turn: dict[tuple, list] = {}
     for r in gold.itertuples(index=False):
@@ -96,8 +113,8 @@ def _train_sentences(n_convs: int = 400, scheme: str = "bio"):
         if not chars:
             continue
         spans = sorted(by_turn.get((r.conv_id, r.turn_idx), []))
-        tags = spans_to(len(chars), spans)
-        sents.append((chars, [tag2id[t] for t in tags]))
+        tags = codec.encode(len(chars), spans)
+        sents.append((chars, [codec.tag2id[t] for t in tags]))
     return sents
 
 
@@ -108,8 +125,7 @@ def train(
     seed: int = 42,
     scheme: str = "bio",
 ) -> dict:
-    tags, _tag2id, _spans_to = SCHEMES[scheme]
-    n_tags = len(tags)
+    n_tags = len(SCHEMES[scheme].tags)
     start, stop = n_tags, n_tags + 1
     sents = _train_sentences(n_convs, scheme)
     corpus_chars = [ch for chars, _ in sents for ch in chars]
@@ -118,8 +134,9 @@ def train(
 
     # Pre-compute frozen BiLSTM features once (they never change).
     feats = []
+    lut = M.vocab_lut(vocab)
     for chars, gold in sents:
-        ids, lengths = M.encode_batch([chars], vocab)
+        ids, lengths = M.encode_batch([chars], vocab, lut=lut)
         h = M.hidden_states(ids, lengths, p)[0, : len(chars), :]  # [T,2h]
         feats.append(h)
 
@@ -153,17 +170,16 @@ def train(
     return p | {"vocab_chars": np.array(sorted(set(corpus_chars)), dtype=object)}
 
 
-def save(p: dict, path: str = MODEL_PATH) -> None:
+def save(p: dict, path: str) -> None:
     np.savez_compressed(path, **p)
 
 
-def load_or_train(
-    path: str = MODEL_PATH, scheme: str = "bio"
-) -> tuple[dict, dict[str, int]]:
-    """Load the committed frozen model; fall back to the packaged
+def load_or_train(scheme: str = "bio") -> tuple[dict, dict[str, int]]:
+    """Load the scheme's committed frozen model; fall back to the packaged
     resource when the package is imported from a ``--py-files`` zip
     (no real filesystem path); (re)train deterministically only if
     neither exists.  Returns (params, vocab)."""
+    path = SCHEMES[scheme].path
     if os.path.exists(path):
         z = np.load(path, allow_pickle=True)
     else:
@@ -201,7 +217,7 @@ if __name__ == "__main__":
 
     scheme = sys.argv[1] if len(sys.argv) > 1 else "bio"
     params = train(scheme=scheme)
-    save(params, MODEL_PATH if scheme == "bio" else BMES_MODEL_PATH)
+    save(params, SCHEMES[scheme].path)
     print(
         f"trained {scheme}:",
         {

@@ -124,9 +124,7 @@ def stream_mentions_foreach_batch(
         if batch_df.isEmpty():
             return
         tagged = tag_turns(batch_df, mode=mode)
-        commit_stage(
-            tagged, root, f"stream_tagged/batch={batch_id}", n_buckets=8
-        )
+        commit_stage(tagged, root, f"stream_tagged/batch={batch_id}")
 
     return sink
 

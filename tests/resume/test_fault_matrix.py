@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ner_spark.checkpoint import resume
 from ner_spark.checkpoint.lineage import (
+    N_BUCKETS,  # run_resumable's default
     lineage_rows,
     read_snapshot,
     snapshots,
@@ -26,7 +27,6 @@ from ner_spark.checkpoint.resume import run_resumable, validate_all
 from ner_spark.fixtures.transcripts import transcripts_df
 
 N_CONVS = 40
-N_BUCKETS = 8  # run_resumable's default
 STAGES = ("tagged_turns", "mentions", "triples")
 
 

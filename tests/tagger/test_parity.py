@@ -13,7 +13,7 @@ from ner_spark.fixtures.transcripts import (
     transcripts_pdf,
 )
 from ner_spark.ner.oracle import oracle_mentions, span_prf
-from ner_spark.ner.tagger import tag_mentions, tag_turns
+from ner_spark.ner.tagger import MODES, tag_mentions, tag_turns
 
 KEY = ["conv_id", "turn_idx", "start", "end", "surface", "label"]
 N_CONVS = 120
@@ -107,7 +107,7 @@ def test_bmes_model_matches_gold_spans(spark):
 def test_gazetteer_bmes_codec_path(spark):
     """The gazetteer BMES codec path (spans → BMES tags → decode_bmes
     inside the UDF) round-trips to the gazetteer BIO path exactly —
-    kept covered here since kg_mentions_bmes now carries the MODEL
+    kept covered here since kg_mentions_alt carries the BMES MODEL
     path externally."""
     t = transcripts_df(spark, 40)
     bio = _sorted_pdf(tag_mentions(t, mode="gazetteer").select(KEY).toPandas())
@@ -131,3 +131,37 @@ def test_unknown_mode_raises_on_the_driver(spark):
     silently tagging with the gazetteer."""
     with pytest.raises(ValueError, match="modle"):
         tag_turns(transcripts_df(spark, 2), mode="modle")
+
+
+# Texts outside the fixture corpus, on which the four modes disagree
+# (e.g. only the BMES model tags 微 in 微软谷歌苹果 as PER).
+DISAGREE_TEXTS = [
+    "微软谷歌苹果",
+    "王李",
+    "今天张三和李四一起去了杭州",
+    "请问赵六是否已经加入阿里巴巴",
+]
+
+
+def test_oracle_matches_distributed_tagger_in_every_mode(spark):
+    pdf = pd.DataFrame(
+        {
+            "conv_id": [f"c{i}" for i in range(len(DISAGREE_TEXTS))],
+            "turn_idx": [0] * len(DISAGREE_TEXTS),
+            "text": DISAGREE_TEXTS,
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    got = {}
+    for mode in MODES:
+        want = _sorted_pdf(oracle_mentions(pdf, mode))
+        got[mode] = _sorted_pdf(tag_mentions(df, mode=mode).select(KEY).toPandas())
+        pd.testing.assert_frame_equal(got[mode], want, obj=mode)
+    assert not got["model_bmes"].equals(got["gazetteer"])
+    assert not got["model_bmes"].equals(got["model"])
+
+
+def test_oracle_unknown_mode_raises():
+    turns, _ = transcripts_pdf(2)
+    with pytest.raises(ValueError, match="modle"):
+        oracle_mentions(turns, mode="modle")
