@@ -2,9 +2,18 @@
 SURVEY.md §2.1; architecture per Huang/Xu/Yu 2015 arXiv:1508.01991 and
 Lample et al. NAACL 2016 — public literature, no reference code).
 
-Deterministic fp32: sequential time loop, single-threaded BLAS
-(workers pin OMP_NUM_THREADS=1 via the session factory), fixed
-parameter dict — identical results on any executor/partitioning.
+The BiLSTM is a packed, gate-major recurrence (``_packed_states``):
+rows sorted by length step only while they run, the input projection
+is a gather from a per-character table (``fold_input``), and gates are
+[4h, n] blocks, so each activation is one contiguous ufunc call.
+
+Deterministic fp32: sequential time loop, single-threaded BLAS (workers
+pin OMP_NUM_THREADS=1 via the session factory), fixed parameters.  A
+text's spans do not depend on the batch it is tagged in
+(tests/tagger/test_batch.py).  Its emission bits may: BLAS blocks the
+per-step matmul by the number of running rows, and measured emissions
+differ by ≤ 1e-5 between batchings and from a naive per-text LSTM
+(tests/tagger/test_kernel.py).
 
 Parameter dict layout (``model_tiny.npz`` keys):
     embed   [V, d]        char embeddings (row 0 = <PAD>, 1 = <UNK>)
@@ -14,6 +23,9 @@ Parameter dict layout (``model_tiny.npz`` keys):
     proj_b  [K]
     trans   [K+2, K+2]    CRF transitions; rows/cols K=START, K+1=STOP
     vocab   array of chars (index = id)
+plus, derived by ``fold_input`` where the parameters load:
+    xt_f, xt_b            [4h, V] folded input projections
+    whT_f, whT_b          [4h, h] transposed recurrent weights
 """
 
 from __future__ import annotations
@@ -80,118 +92,132 @@ def encode_batch(
     return ids, lengths
 
 
-# Per-process grow-only buffer for the hoisted input projection
-# (x·Wx + b): ONE [B·T, 4h] C-contiguous block reused across batches
-# and both LSTM directions (they run sequentially, and each consumes
-# its xw inside its own time loop before the other starts).  Spark
-# python workers are single-threaded and reused across tasks, so the
-# buffer amortizes to zero allocation in steady state — same op
-# sequence (matmul into ``out`` + in-place bias add), bit-identical.
-_XW_BUFS: dict[int, np.ndarray] = {}
+def fold_input(p: dict) -> dict:
+    """``p`` plus each direction's gate-major tables, derived once where
+    the parameters are loaded:
 
+    - ``xt_f``/``xt_b`` [4h, V]: ``(embed·wx + b)ᵀ``, the input
+      projection of every vocabulary id, so the recurrence gathers a
+      column per character instead of multiplying;
+    - ``whT_f``/``whT_b`` [4h, h]: ``whᵀ``.
 
-def _xw_into(x: np.ndarray, wx: np.ndarray, b: np.ndarray) -> np.ndarray:
-    B, T, d = x.shape
-    n, m = B * T, wx.shape[1]
-    buf = _XW_BUFS.get(m)
-    if buf is None or buf.shape[0] < n:
-        buf = np.empty((max(n, 4096), m), dtype=np.float32)
-        _XW_BUFS[m] = buf
-    out = buf[:n]
-    np.matmul(x.reshape(n, d), wx, out=out)
-    out += b
-    return out.reshape(B, T, m)
-
-
-def _lstm_dir(
-    x: np.ndarray,
-    mask: np.ndarray,
-    wx,
-    wh,
-    b,
-    reverse: bool,
-    out: np.ndarray | None = None,
-):
-    """One LSTM direction over [B,T,d] → [B,T,h]; masked at padding.
-
-    The input projection is time-independent, so it is hoisted out of
-    the recurrence as ONE [B·T,d]@[d,4h] matmul (plus the bias); only
-    the [B,h]@[h,4h] hidden matmul stays inside the loop.
-
-    The recurrence itself allocates NOTHING: all step tensors live in
-    preallocated buffers updated in place (same op sequence as the
-    naive form, so results are bit-identical).  With 16–32 python
-    workers sharing one box, the per-step temporary churn of the naive
-    form (≈6 allocations × T steps × [B,4h]) was the dominant
-    memory-bandwidth/allocator load — measured as the per-core
-    throughput cliff at high parallelism.  ``out`` may be a strided
-    [B,T,h] view (one half of the concat target) — written per step.
-
-    Mask semantics: mask values are exactly 0/1, so the arithmetic
-    blend ``m·new + (1−m)·old`` equals a selective copy bit-for-bit;
-    implemented as ``np.copyto(..., where=active)``."""
-    B, T, d = x.shape
-    h_dim = wh.shape[0]
-    xw = _xw_into(x, wx, b)
-    h = np.zeros((B, h_dim), dtype=np.float32)
-    c = np.zeros((B, h_dim), dtype=np.float32)
-    if out is None:
-        out = np.zeros((B, T, h_dim), dtype=np.float32)
-    g = np.empty((B, 4 * h_dim), dtype=np.float32)
-    cnew = np.empty((B, h_dim), dtype=np.float32)
-    tmp = np.empty((B, h_dim), dtype=np.float32)
-    steps = range(T - 1, -1, -1) if reverse else range(T)
-    for t in steps:
-        np.matmul(h, wh, out=g)
-        g += xw[:, t, :]
-        i_g = g[:, :h_dim]
-        f_g = g[:, h_dim : 2 * h_dim]
-        c_g = g[:, 2 * h_dim : 3 * h_dim]
-        o_g = g[:, 3 * h_dim :]
-        _sigmoid_inplace(i_g)
-        _sigmoid_inplace(f_g)
-        np.tanh(c_g, out=c_g)
-        _sigmoid_inplace(o_g)
-        active = mask[:, t : t + 1]  # [B,1] bool
-        # c ← f·c + i·c̃ on active rows only
-        np.multiply(f_g, c, out=cnew)
-        np.multiply(i_g, c_g, out=tmp)
-        cnew += tmp
-        np.copyto(c, cnew, where=active)
-        # h ← o·tanh(c) on active rows only
-        np.tanh(c, out=tmp)
-        tmp *= o_g
-        np.copyto(h, tmp, where=active)
-        out[:, t, :] = h
+    Gate rows are ordered i, f, o, c̃ (the weights store i, f, c̃, o),
+    so the three sigmoid gates are one contiguous block.  The table is
+    built from ``embed`` as stored: fp16-rounded when it comes from
+    ``load_or_train``."""
+    x = p["embed"].astype(np.float32)
+    h = p["wh_f"].shape[0]
+    gates = np.r_[0 : 2 * h, 3 * h : 4 * h, 2 * h : 3 * h]
+    out = dict(p)
+    for d in "fb":
+        xw = x @ p[f"wx_{d}"] + p[f"b_{d}"]
+        out[f"xt_{d}"] = np.ascontiguousarray(xw.T[gates])
+        out[f"whT_{d}"] = np.ascontiguousarray(p[f"wh_{d}"].T[gates])
     return out
 
 
-def hidden_states(ids: np.ndarray, lengths: np.ndarray, p: dict) -> np.ndarray:
-    """C3+C4: embedding lookup + BiLSTM concat → [B,T,2h] fp32.
-    Both directions write straight into their half of the concat
-    target (no post-hoc concatenate copy)."""
-    mask = (
-        np.arange(ids.shape[1])[None, :] < lengths[:, None]
-    )  # [B,T] bool
-    x = p["embed"][ids].astype(np.float32)  # [B,T,d]
+def _lstm_packed(
+    xt: np.ndarray,
+    whT: np.ndarray,
+    ids: np.ndarray,
+    running: list[int],
+    out: np.ndarray,
+) -> None:
+    """One LSTM direction over packed rows.
+
+    ``ids`` [T, B] holds the rows' ids column-wise, rows sorted by
+    length, descending, so step t runs exactly the first
+    ``running[t]`` columns (``pack_padded_sequence``): no row steps
+    past its end, so no mask and no padded id is read.  h_t goes to
+    ``out[:, t, :n]`` ([h, T, B]); the next step's [4h,h]@[h,n]
+    matmul reads it back from there.
+
+    Gates are [4h, n] C-contiguous, so each activation is one ufunc
+    call on one contiguous block.  The loop allocates nothing: the
+    input projection is an ``np.take`` of ``xt`` columns into a
+    preallocated buffer, and every other op writes in place:
+    c ← f·c + i·c̃, h ← o·tanh(c)."""
+    h, B = whT.shape[1], ids.shape[1]
+    c = np.zeros((h, B), dtype=np.float32)
+    g_buf = np.empty(4 * h * B, dtype=np.float32)
+    x_buf = np.empty(4 * h * B, dtype=np.float32)
+    for t, n in enumerate(running):
+        g = g_buf[: 4 * h * n].reshape(4 * h, n)
+        if t == 0:  # h₋₁ = 0: the gates are the input projection
+            np.take(xt, ids[0, :n], axis=1, out=g, mode="clip")
+        else:
+            x = x_buf[: 4 * h * n].reshape(4 * h, n)
+            np.take(xt, ids[t, :n], axis=1, out=x, mode="clip")
+            np.matmul(whT, out[:, t - 1, :n], out=g)
+            g += x
+        _sigmoid_inplace(g[: 3 * h])
+        i, f, o, cc = g[:h], g[h : 2 * h], g[2 * h : 3 * h], g[3 * h :]
+        np.tanh(cc, out=cc)
+        cv = c[:, :n]
+        cv *= f
+        i *= cc
+        cv += i
+        np.tanh(cv, out=i)
+        np.multiply(o, i, out=out[:, t, :n])
+
+
+def _packed_states(
+    ids: np.ndarray, lengths: np.ndarray, p: dict
+) -> tuple[np.ndarray, np.ndarray]:
+    """C3+C4 → (H [2h, T, B'] fp32, order): the BiLSTM states of the
+    rows ``ids[order]`` (sorted by length, descending), forward half
+    then backward half, zero past each row's end.
+
+    The backward direction runs forward over each row's reversed ids,
+    left-aligned, so it packs like the forward one; one gather then
+    puts its states back at their positions."""
     B, T = ids.shape
-    h_dim = p["wh_f"].shape[0]
-    hs = np.zeros((B, T, 2 * h_dim), dtype=np.float32)
-    _lstm_dir(
-        x, mask, p["wx_f"], p["wh_f"], p["b_f"], reverse=False,
-        out=hs[:, :, :h_dim],
+    h = p["whT_f"].shape[1]
+    order = np.argsort(-lengths, kind="stable")
+    L = lengths[order].astype(np.int64)
+    steps = int(L[0]) if B else 0
+    running = (L[None, :] > np.arange(steps)[:, None]).sum(axis=1).tolist()
+    t = np.arange(T)[:, None]
+    # rt[t, j]: the position row j's reversed pass reads at step t (t
+    # itself past the row's end, where nothing is read or written)
+    rt = np.where(t < L, L - 1 - t, t)
+    # [T, B]; intp ids take np.take's fast path
+    fwd = ids[order].T.astype(np.intp, order="C")
+    H = np.zeros((2 * h, T, B), dtype=np.float32)
+    _lstm_packed(p["xt_f"], p["whT_f"], fwd, running, H[:h])
+    bwd = np.take_along_axis(fwd, rt, axis=0)
+    rev = np.zeros((h, T, B), dtype=np.float32)
+    _lstm_packed(p["xt_b"], p["whT_b"], bwd, running, rev)
+    np.take(
+        rev.reshape(h, T * B),
+        (rt * B + np.arange(B)).ravel(),
+        axis=1,
+        out=H[h:].reshape(h, T * B),
+        mode="clip",
     )
-    _lstm_dir(
-        x, mask, p["wx_b"], p["wh_b"], p["b_b"], reverse=True,
-        out=hs[:, :, h_dim:],
-    )
-    return hs
+    return H, order
+
+
+def hidden_states(ids: np.ndarray, lengths: np.ndarray, p: dict) -> np.ndarray:
+    """C3+C4: BiLSTM states → [B,T,2h] fp32 in the rows' given order
+    (zero at padded positions).  ``p`` carries ``fold_input``'s
+    tables."""
+    H, order = _packed_states(ids, lengths, p)
+    return np.take(H.transpose(2, 1, 0), np.argsort(order), axis=0)
 
 
 def emissions(ids: np.ndarray, lengths: np.ndarray, p: dict) -> np.ndarray:
-    """C5: [B,T,2h] @ proj → [B,T,K]."""
-    h = hidden_states(ids, lengths, p)
-    return h @ p["proj_w"] + p["proj_b"]
+    """C5: emission scores [B,T,K] in the rows' given order.  The
+    projection is ONE [K,2h]@[2h,T·B] matmul on the gate-major state
+    buffer (on a transposed [B,T,2h] view the matmul falls off BLAS).
+    Padded positions read ``proj_b``."""
+    H, order = _packed_states(ids, lengths, p)
+    k = p["proj_w"].shape[1]
+    _, T, B = H.shape
+    e = p["proj_w"].T @ H.reshape(-1, T * B)
+    e += p["proj_b"][:, None]
+    e = e.reshape(k, T, B).transpose(2, 1, 0)
+    return np.take(e, np.argsort(order), axis=0)
 
 
 def viterbi_batch(

@@ -137,11 +137,12 @@ def tag_pdf_batch(texts: list[str], scheme: str = "bio") -> list[list[Span]]:
     codec = SCHEMES[scheme]
     out: list[list[Span]] = [[] for _ in texts]
     todo = [(i, list(t)) for i, t in enumerate(texts) if t]
-    # Sort by length before chunking: each numpy mini-batch pads to its
-    # own max length, cutting padded-FLOP waste (the reference family's
-    # batch_yield sorts by length for the same reason).  Stable sort ⇒
-    # deterministic; per-row results are batch-composition independent,
-    # so this is purely a throughput knob.
+    # Sort by length before chunking: a numpy mini-batch takes as many
+    # recurrence steps as its longest text, so similar lengths keep
+    # many rows running per step (the reference family's batch_yield
+    # sorts by length too).  Stable sort ⇒ deterministic; per-row spans
+    # are batch-composition independent, so this is purely a
+    # throughput knob.
     todo.sort(key=lambda p: len(p[1]))
     for lo in range(0, len(todo), _UDF_BATCH):
         chunk = todo[lo : lo + _UDF_BATCH]

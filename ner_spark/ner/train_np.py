@@ -133,11 +133,12 @@ def train(
     p = init_params(vocab, seed, n_tags=n_tags)
 
     # Pre-compute frozen BiLSTM features once (they never change).
+    frozen = M.fold_input(p)
     feats = []
     lut = M.vocab_lut(vocab)
     for chars, gold in sents:
         ids, lengths = M.encode_batch([chars], vocab, lut=lut)
-        h = M.hidden_states(ids, lengths, p)[0, : len(chars), :]  # [T,2h]
+        h = M.hidden_states(ids, lengths, frozen)[0, : len(chars)]  # [T,2h]
         feats.append(h)
 
     for epoch in range(epochs):
@@ -178,7 +179,8 @@ def load_or_train(scheme: str = "bio") -> tuple[dict, dict[str, int]]:
     """Load the scheme's committed frozen model; fall back to the packaged
     resource when the package is imported from a ``--py-files`` zip
     (no real filesystem path); (re)train deterministically only if
-    neither exists.  Returns (params, vocab)."""
+    neither exists.  Returns (params with ``M.fold_input``'s tables,
+    vocab)."""
     path = SCHEMES[scheme].path
     if os.path.exists(path):
         z = np.load(path, allow_pickle=True)
@@ -200,16 +202,16 @@ def load_or_train(scheme: str = "bio") -> tuple[dict, dict[str, int]]:
     p = {k: z[k] for k in z.files}
     chars = list(p.pop("vocab_chars"))
     vocab = M.build_vocab(chars)
-    # Inference-time working-set cut: the embedding table is the
-    # biggest RANDOM-ACCESS array in the hot path (the gather in
-    # hidden_states); storing it fp16 halves those bytes — the shared
-    # memory-bandwidth bottleneck when 16-32 python workers tag on one
-    # box.  Values are cast back to fp32 per batch; the single-process
-    # oracle loads through this same function, so distributed ==
-    # oracle stays bit-identical (both see the same quantized table).
+    # The committed models' emissions are defined on an fp16-rounded
+    # embedding: it once halved the bytes of the kernel's hot gather.
+    # That gather now reads ``fold_input``'s fp32 table, which is built
+    # from this rounded embedding, so the rounding stays: without it
+    # every emission would move and the spans the models were frozen
+    # with could change.  The single-process oracle loads through this
+    # same function, so it and the distributed tagger see one table.
     if p["embed"].dtype != np.float16:
         p["embed"] = p["embed"].astype(np.float16)
-    return p, vocab
+    return M.fold_input(p), vocab
 
 
 if __name__ == "__main__":

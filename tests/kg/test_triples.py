@@ -111,3 +111,29 @@ def test_flagship_runs(spark):
     n = df.count()
     assert n > 0
     assert set(df.columns) >= set(KEY) | {"subj_mention_id", "obj_mention_id"}
+
+
+def test_triples_window_runs_one_wave(spark):
+    """On a small input the window stage still runs defaultParallelism
+    tasks: AQE must not coalesce its shuffle into one task, which would
+    leave the expanding pair generation (and any write of it) on one
+    slot."""
+    t = transcripts_df(spark, 20)
+    tagged = tag_turns(t, mode="gazetteer").persist()
+    tagged.count()
+    sc = spark.sparkContext
+    group = "triples-one-wave"
+    sc.setJobGroup(group, "extract_triples")
+    try:
+        extract_triples(tagged).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        s
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    # the result stage (window + explode + write) has the highest id
+    assert tracker.getStageInfo(max(stages)).numTasks == sc.defaultParallelism
+    tagged.unpersist()
