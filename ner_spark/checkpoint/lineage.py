@@ -31,13 +31,15 @@ implements the documented parquet fallback behind the same interface:
   crash between the rows and the manifest is repaired by the next
   commit, and a no-op commit writes no manifest.
 
-Snapshot reads pin the manifest's exact files, so readers never see a
-torn write or a stray uncommitted file (plain directory scans do), and
-``read_snapshot(…, id)`` re-reads an older table state for as long as
-its files survive.  The parquet fallback's partition overwrite
-REPLACES files (unlike Iceberg's copy-on-write), so a pinned snapshot
-whose files are gone — or whose size OR mtime_ns integrity token
-changed (in-place rewrite, even at identical size) — raises
+``read_snapshot`` is the one reader of a committed stage (commit_stage
+returns the latest snapshot too).  It pins the manifest's exact files,
+so readers never see a torn write or a stray uncommitted file (plain
+directory scans do), and ``read_snapshot(…, id)`` re-reads an older
+table state for as long as its files survive.  The parquet fallback's
+partition overwrite REPLACES files (unlike Iceberg's copy-on-write), so
+a pinned snapshot whose files are gone — or whose size OR mtime_ns
+integrity token changed (in-place rewrite, even at identical size) —
+raises
 :class:`SnapshotExpiredError` instead of silently returning wrong rows:
 the same observable failure as reading an expired Iceberg snapshot
 after ``expire_snapshots``.
@@ -107,11 +109,8 @@ def lineage_rows(root: str, stage: str) -> list[dict]:
     return rows
 
 
-def committed_buckets(
-    root: str, stage: str, n_buckets: int | None = None
-) -> list[int]:
-    """Bucket ids with a committed lineage row.  When ``n_buckets`` is
-    given, only rows committed UNDER THAT SAME bucket domain count: a
+def committed_buckets(root: str, stage: str, n_buckets: int) -> list[int]:
+    """Bucket ids with a lineage row committed UNDER ``n_buckets``: a
     bucket written at a different n_buckets holds different rows for
     the same id (pmod(h, 64) == 3 is not pmod(h, 8) == 3), so a domain
     change invalidates every prior bucket.  The one rule for what a
@@ -120,8 +119,7 @@ def committed_buckets(
     return [
         int(r["part"])
         for r in lineage_rows(root, stage)
-        if n_buckets is None
-        or (r["n_buckets"] == n_buckets and 0 <= r["part"] < n_buckets)
+        if r["n_buckets"] == n_buckets and 0 <= r["part"] < n_buckets
     ]
 
 
@@ -166,25 +164,21 @@ def _bucket_files(data_dir: str, part: int | str) -> dict[str, list[int]]:
 
 
 def commit_stage(
-    df: DataFrame,
-    root: str,
-    stage: str,
-    n_buckets: int = N_BUCKETS,
-    resume: bool = True,
+    df: DataFrame, root: str, stage: str, n_buckets: int = N_BUCKETS
 ) -> DataFrame:
     """Write ``df`` (must contain conv_id) partition-aligned with
-    per-bucket lineage; on resume, skip already-committed buckets.
+    per-bucket lineage, skipping already-committed buckets (deleting a
+    stage's lineage rows first forces a full rewrite).
 
-    Returns the full committed stage output (read back — committed
-    buckets included), so downstream stages always see the complete
-    table regardless of how much this run recomputed."""
+    Returns the stage's latest snapshot (read_snapshot, committed
+    buckets included, ``part`` dropped): exactly the files its lineage
+    rows name, so a stray file in a bucket dir never reaches the
+    stages derived from it."""
     spark = df.sparkSession
     data_dir = os.path.join(root, stage)
     valid = set(range(n_buckets))
     rows = lineage_rows(root, stage)
-    done = (
-        set(committed_buckets(root, stage, n_buckets)) if resume else set()
-    )
+    done = set(committed_buckets(root, stage, n_buckets))
     kept = [r for r in rows if r["part"] in done]
     # Drop stale on-disk state BEFORE writing: dynamic overwrite only
     # replaces partitions present in this run's output, so a leftover
@@ -216,9 +210,9 @@ def commit_stage(
     # Stats over EXACTLY the buckets this commit computed — a positive
     # filter on (valid − done), not merely "everything not committed",
     # so nothing outside this run's write set can earn a lineage row.
-    # Partition pruning keeps the scan to the recomputed buckets.  Both
-    # read-backs pass the schema: a commit with no rows leaves no
-    # parquet file to infer it from.
+    # Partition pruning keeps the scan to the recomputed buckets.  The
+    # read passes the schema: a commit with no rows leaves no parquet
+    # file to infer it from.
     written = spark.read.schema(bucketed.schema).parquet(data_dir).filter(
         F.col("part").isin(sorted(valid - done))
     )
@@ -251,7 +245,7 @@ def commit_stage(
     # committed table state (S2's snapshot-pinned read contract).
     record_snapshot(root, stage, n_buckets, kept, bucketed.schema.json())
 
-    return spark.read.schema(bucketed.schema).parquet(data_dir).drop("part")
+    return read_snapshot(spark, root, stage).drop("part")
 
 
 def validate_stage(spark: SparkSession, root: str, stage: str) -> bool:
@@ -369,13 +363,6 @@ def _manifest_names(root: str, stage: str) -> list[str]:
     )
 
 
-def has_snapshot_log(root: str, stage: str) -> bool:
-    """True iff at least one manifest exists — a bare `_snapshots/…`
-    INTERMEDIATE directory (created for a nested child stage like
-    `stream_tagged/batch=3`) is NOT a log for its parent path."""
-    return bool(_manifest_names(root, stage))
-
-
 def _latest(root: str, stage: str) -> dict | None:
     """The newest manifest — reads ONE file (ids are zero-padded, so
     the lexically-greatest name is the newest), not the whole history."""
@@ -489,18 +476,14 @@ def read_snapshot(
             f"overwrites; Iceberg would retain them until "
             f"expire_snapshots)"
         )
-    paths = [os.path.join(data_dir, rel) for rel in sorted(rec["files"])]
-    if not paths:
-        # an empty commit: no files to pin — reconstruct the schema the
-        # manifest recorded at commit time (includes the `part` column,
-        # matching what a non-empty basePath read surfaces)
-        return spark.createDataFrame(
-            [], T.StructType.fromJson(json.loads(rec["schema"]))
-        )
-    # basePath keeps the hive `part=` column, exactly like the plain
-    # directory read the un-pinned fallback does — so resume-side
-    # partition pruning on `part` still applies to pinned reads.
-    return spark.read.option("basePath", data_dir).parquet(*paths)
+    # The manifest's schema (with `part`) spares Spark a footer-reading
+    # job and types an empty commit's zero-path read; basePath keeps
+    # the hive `part=` column, so pruning on `part` still applies.
+    return (
+        spark.read.schema(T.StructType.fromJson(json.loads(rec["schema"])))
+        .option("basePath", data_dir)
+        .parquet(*(os.path.join(data_dir, rel) for rel in sorted(rec["files"])))
+    )
 
 
 def snapshot_contract_violations(spark: SparkSession) -> int:
@@ -517,7 +500,8 @@ def snapshot_contract_violations(spark: SparkSession) -> int:
        2 — which must NOT contain the stray file (manifests come from
        lineage rows, not directory rescans) — while snapshot 1 still
        reads its original partial rows (time travel);
-    4. a full overwrite expires snapshots 1 and 2
+    4. a full overwrite (the lineage rows deleted, then a commit)
+       expires snapshots 1 and 2
        (SnapshotExpiredError), and the new latest reads the full
        table.
     """
@@ -555,7 +539,8 @@ def snapshot_contract_violations(spark: SparkSession) -> int:
         ok_no_launder = read_snapshot(spark, tmp, "s1").count() == n_full
         ok_travel = read_snapshot(spark, tmp, "s1", 1).count() == n_part
 
-        commit_stage(df, tmp, "s1", resume=False)
+        shutil.rmtree(_lineage_dir(tmp, "s1"))  # forces a full rewrite
+        commit_stage(df, tmp, "s1")
         ok_latest = read_snapshot(spark, tmp, "s1").count() == n_full
         try:
             read_snapshot(spark, tmp, "s1", 2)

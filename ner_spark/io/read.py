@@ -2,8 +2,7 @@
 
 - ``table``: driver testdata parquet (TESTDATA.md).
 - ``read_transcripts``: the engine's primary input — Iceberg table of
-  multi-turn transcripts (BASELINE.json input_hint); sandbox fallback
-  reads partitioned parquet written by :mod:`ner_spark.io.write`.
+  multi-turn transcripts (BASELINE.json input_hint), else parquet.
 - ``read_msra_corpus``: MSRA-style ``char<SP>tag`` text corpus
   (reference data format, SURVEY.md §1.1), parsed distributed via a
   grouped mapInPandas (operator S3).
@@ -30,17 +29,12 @@ def read_transcripts(
     """Read the transcripts table.
 
     Production: Iceberg with ``option("snapshot-id", ...)`` for pinned
-    reads (operator S2); the Iceberg runtime jar is not available in
-    the sandbox (no network — SURVEY.md §0), so this transparently
-    falls back to the parquet layout, which is partitioned by
-    ``part=pmod(xxhash64(conv_id), N)`` so resume reads prune.
-
-    The fallback HONORS ``snapshot_id`` when the path was written by
-    ``commit_stage`` (checkpoint/lineage.py records a JSON manifest
-    per commit): the read pins the manifest's exact fileset — atomic
-    visibility + time travel until a bucket is overwritten, with
-    SnapshotExpiredError when it was.  Only a bare directory with no
-    snapshot log ignores the pin (and raises to say so).
+    reads (operator S2).  Without a catalog or the Iceberg runtime jar
+    (SURVEY.md §0) this falls back to a plain parquet read, whose hive
+    ``part=`` dirs surface as a column for partition pruning.  The
+    fallback cannot pin: a ``snapshot_id`` without Iceberg raises
+    ValueError.  Committed stages are read with
+    checkpoint/lineage.read_snapshot, not here.
     """
     try:
         if ".parquet" in path or not spark.conf.get(
@@ -52,42 +46,11 @@ def read_transcripts(
             reader = reader.option("snapshot-id", str(snapshot_id))
         return reader.load(path)
     except Exception:
-        import os
-
-        from ner_spark.checkpoint.lineage import (
-            has_snapshot_log,
-            read_snapshot,
-        )
-
-        # Stage names may be nested (streaming commits e.g.
-        # 'stream_tagged/batch=3'): try every root/stage split, deepest
-        # root first, so the snapshot log is found wherever
-        # commit_stage put it (root/_snapshots/<full stage path>).  A
-        # split only matches when a MANIFEST exists there — a bare
-        # intermediate `_snapshots/...` dir created for a nested child
-        # stage is not a log for its parent path.  Relative paths get
-        # the cwd-rooted split too (root = "").
-        norm = os.path.normpath(path)
-        parts = norm.split(os.sep)
-        splits = [
-            (os.sep.join(parts[:i]) or os.sep, os.sep.join(parts[i:]))
-            for i in range(len(parts) - 1, 0, -1)
-        ]
-        if not os.path.isabs(norm):
-            splits.append(("", norm))
-        for cand_root, cand_stage in splits:
-            if has_snapshot_log(cand_root, cand_stage):
-                return read_snapshot(
-                    spark, cand_root, cand_stage, snapshot_id
-                )
         if snapshot_id is not None:
             raise ValueError(
                 f"snapshot_id={snapshot_id} requested but {path!r} has "
-                "no snapshot log (not written by commit_stage) and no "
-                "Iceberg catalog is configured"
-            )
-        # Plain-parquet fallback; `part=` hive-style dirs surface as a
-        # column and drive partition pruning on resume (J6 path).
+                "no snapshot log: the Iceberg read is unavailable"
+            ) from None
         return spark.read.parquet(path)
 
 

@@ -6,22 +6,23 @@ O(log² n) rounds).
 No GraphX/graphframes, no RDDs — each round is two keyed self-join +
 aggregate passes (operator J10 + A1).
 
-Two execution branches, dispatched on the distinct-edge count:
+Two execution branches, dispatched on the edge-row count:
 
-- **small graph** (≤ SMALL_EDGE_THRESHOLD edges): collect the edge
-  list (Arrow) and run driver-side union-find with path compression.
+- **small graph** (≤ SMALL_EDGE_THRESHOLD edge rows, duplicates and
+  self-loops included): one bounded Arrow collect of at most
+  SMALL_EDGE_THRESHOLD + 1 rows both picks the branch and feeds
+  driver-side union-find with path compression (self-loops dropped
+  in pandas; duplicate edges are harmless to union-find).
   The match-edge graph lives over the *distinct surface vocabulary*
   (ner_spark.kg.linking already reduced it), which is tiny relative to
   the corpus — even a 10¹²-turn corpus has a vocabulary-scale graph,
   and the per-round driver-loop latency of the distributed algorithm
-  dwarfs a single collect at this size.  Round 1 measured the
-  distributed loop at 122.6s on a graph union-find finishes in
-  milliseconds; this branch is why that query now takes seconds.
-- **large graph**: the distributed star loop (star_loop_components).
-  One Spark action per
+  dwarfs a single collect at this size (the star loop took 122.6 s
+  on a graph union-find finishes in milliseconds).
+- **large graph**: the distributed star loop (star_loop_components)
+  over the distinct, self-loop-free edges.  One Spark action per
   round (a LAZY checkpoint materialized by the convergence-fingerprint
-  job — round 1 ran an eager checkpoint job PLUS a fingerprint job per
-  round, doubling fixed latency).  Uses a reliable ``checkpoint()``
+  job).  Uses a reliable ``checkpoint()``
   when the session has a checkpoint dir (executor-loss-safe on a real
   cluster), else ``localCheckpoint``.
 
@@ -33,13 +34,11 @@ driver-checked exactly vs a DuckDB recursive-CTE closure in
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
-# Above this many distinct edges the driver union-find branch would
-# collect too much; switch to the distributed star loop.  1M edges ≈
+# Above this many edge rows the driver union-find branch would collect
+# too much; switch to the distributed star loop.  1M edges ≈
 # 16 MB of longs over Arrow — trivial for the driver, far below any
 # realistic vocabulary-graph size cliff.
 SMALL_EDGE_THRESHOLD = 1_000_000
@@ -128,36 +127,30 @@ def _checkpointed(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-@contextmanager
-def _edge_set(edges: DataFrame):
-    """(src, dst) → distinct (u, v) edges without self-loops, persisted
-    for the with-block so the branch decision and the branch's first
-    pass (collect or round 1) share one materialization."""
-    e = (
+def star_loop_components(edges: DataFrame) -> DataFrame:
+    """connected_components' distributed branch, whatever the size,
+    over the distinct, self-loop-free (u, v) edges."""
+    base = e = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
-        yield e
+        prev = None
+        for _ in range(MAX_ROUNDS):
+            # Checkpoint (cut lineage) every round — each star pass
+            # references its input twice (join + agg on the same DF),
+            # so an uncheckpointed chain recomputes history once per
+            # reference.  The checkpoint is LAZY and is materialized by
+            # the fingerprint action, so it costs no extra job.
+            e = _checkpointed(_small_star(_large_star(e)))
+            fp = _fingerprint(e)
+            if fp == prev:
+                break
+            prev = fp
     finally:
-        e.unpersist()
-
-
-def _star_loop(e: DataFrame) -> DataFrame:
-    prev = None
-    for _ in range(MAX_ROUNDS):
-        # Checkpoint (cut lineage) every round — each star pass
-        # references its input twice (join + agg on the same DF), so an
-        # uncheckpointed chain recomputes history once per reference.
-        # The checkpoint is LAZY and is materialized by the fingerprint
-        # action, so it costs no extra job.
-        e = _checkpointed(_small_star(_large_star(e)))
-        fp = _fingerprint(e)
-        if fp == prev:
-            break
-        prev = fp
+        base.unpersist()
     # At the fixpoint every edge is (node, root), root < node.
     assign = e.select(
         F.col("u").alias("node"), F.col("v").alias("component")
@@ -168,21 +161,20 @@ def _star_loop(e: DataFrame) -> DataFrame:
     return assign.unionByName(roots).distinct()
 
 
-def star_loop_components(edges: DataFrame) -> DataFrame:
-    """connected_components' distributed branch, whatever the size."""
-    with _edge_set(edges) as e:
-        return _star_loop(e)
-
-
 def connected_components(edges: DataFrame) -> DataFrame:
     """(src, dst) edge list → (node, component) with component = min
     node id reachable.  Isolated nodes (no edges) are callers' concern
     (left-join the node table afterwards; absent ⇒ own component).
-    Graphs of ≤ SMALL_EDGE_THRESHOLD distinct edges run the driver
-    union-find, larger ones the star loop."""
-    with _edge_set(edges) as e:
-        if e.count() <= SMALL_EDGE_THRESHOLD:
-            return e.sparkSession.createDataFrame(
-                _driver_union_find(e.toPandas()), "node long, component long"
-            )
-        return _star_loop(e)
+    Above SMALL_EDGE_THRESHOLD edge rows the star loop reads ``edges``
+    again, so pass a persisted frame."""
+    pdf = (
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .limit(SMALL_EDGE_THRESHOLD + 1)
+        .toPandas()
+    )
+    if len(pdf) > SMALL_EDGE_THRESHOLD:
+        return star_loop_components(edges)
+    return edges.sparkSession.createDataFrame(
+        _driver_union_find(pdf[pdf["u"] != pdf["v"]]),
+        "node long, component long",
+    )

@@ -14,7 +14,7 @@ Scale design:
   ner_spark.kg.skew's salted layout, which splits hot conversations
   by turn block (safe: tagging is per-turn); then
   ``sortWithinPartitions(conv_id, turn_idx)`` — the O2 ordering
-  invariant.  N defaults to one wave of tasks
+  invariant.  N is one wave of tasks
   (``defaultParallelism``): every Python task pays a fixed worker cost
   (0.2–0.25 s on a shared 4-vCPU host at local[2], 0.13–0.24 s of it
   in pyspark's per-task ``importlib.invalidate_caches()``, which
@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ner_spark.fixtures.gazetteer import GAZETTEER
+from ner_spark.kg import skew
 from ner_spark.ner import model_np as M
 from ner_spark.ner.train_np import SCHEMES, load_or_train
 
@@ -209,10 +210,7 @@ def _tagger_fn(mode: str):
 
 
 def tag_turns(
-    transcripts: DataFrame,
-    mode: str = "model",
-    num_partitions: int | None = None,
-    salt_hot: bool = False,
+    transcripts: DataFrame, mode: str = "model", salt_hot: bool = False
 ) -> DataFrame:
     """transcripts → one row per turn with its span array.
 
@@ -226,16 +224,9 @@ def tag_turns(
     # One wave, a task per slot: the fixed per-task Python worker cost
     # (module docstring) outweighed the straggler rebalancing of 4
     # tasks per slot on every measured input.
-    parts = (
-        num_partitions
-        or transcripts.sparkSession.sparkContext.defaultParallelism
-    )
+    parts = transcripts.sparkSession.sparkContext.defaultParallelism
     if salt_hot:
-        # imported at call time so kgbench's traced run sees the
-        # patched layer function
-        from ner_spark.kg.skew import salted_repartition
-
-        df = salted_repartition(df, parts)
+        df = skew.salted_repartition(df, parts)
     else:
         df = df.repartition(parts, "conv_id")
     df = df.sortWithinPartitions("conv_id", "turn_idx")
@@ -266,12 +257,7 @@ def mentions_from_turns(tagged_turns: DataFrame) -> DataFrame:
 
 
 def tag_mentions(
-    transcripts: DataFrame,
-    mode: str = "model",
-    num_partitions: int | None = None,
-    salt_hot: bool = False,
+    transcripts: DataFrame, mode: str = "model", salt_hot: bool = False
 ) -> DataFrame:
     """transcripts → mentions (explode of tag_turns)."""
-    return mentions_from_turns(
-        tag_turns(transcripts, mode, num_partitions, salt_hot)
-    )
+    return mentions_from_turns(tag_turns(transcripts, mode, salt_hot))

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ner_spark.fixtures.transcripts import transcripts_df
 from ner_spark.io.read import table
+from ner_spark.kg import linking
+from ner_spark.kg import materialize as kg_materialize
 from ner_spark.kg.cooccur import extract_triples
 from ner_spark.ner.tagger import MODES, mentions_from_turns, tag_turns
 
@@ -52,29 +54,22 @@ def run_pipeline(
     triples = extract_triples(tagged)
     out = {"tagged_turns": tagged, "mentions": mentions, "triples": triples}
     if materialize:
-        # imported at call time so kgbench's traced run sees the
-        # patched layer functions
-        from ner_spark.kg.linking import match_edges, surface_nodes
-        from ner_spark.kg.materialize import (
-            build_edges,
-            build_entities,
-            entity_assignments,
-        )
-
         # Vocabulary-scale frames referenced by several linking/CC/
         # materialize actions — persist them so the linking pipeline
         # executes once (same policy as ops/kg_queries' stage cache;
         # callers release via release_pipeline below).
-        nodes = surface_nodes(mentions).persist(StorageLevel.MEMORY_AND_DISK)
+        nodes = linking.surface_nodes(mentions).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         out["nodes"] = nodes
-        edges = match_edges(nodes).persist(StorageLevel.MEMORY_AND_DISK)
+        edges = linking.match_edges(nodes).persist(StorageLevel.MEMORY_AND_DISK)
         out["match_edges"] = edges
-        assignments = entity_assignments(nodes, edges).persist(
+        assignments = kg_materialize.entity_assignments(nodes, edges).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         out["assignments"] = assignments
-        out["entities"] = build_entities(mentions, assignments)
-        out["edges"] = build_edges(triples, assignments)
+        out["entities"] = kg_materialize.build_entities(mentions, assignments)
+        out["edges"] = kg_materialize.build_edges(triples, assignments)
     return out
 
 

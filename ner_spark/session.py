@@ -24,17 +24,17 @@ def default_parallelism() -> int:
 def get_spark(
     app_name: str = "ner_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``shuffle_partitions`` defaults to 2×cores locally; on a real
-    cluster set it high (e.g. 2×total-cores) and let AQE coalesce —
+    Shuffle partitions default to 2×cores (at least 8); on a real
+    cluster set ``spark.sql.shuffle.partitions`` high (e.g.
+    2×total-cores) through ``extra_conf`` and let AQE coalesce —
     partition sizing policy per SURVEY.md §4.3.
     """
     cores = cores or default_parallelism()
-    shuffle = shuffle_partitions or max(2 * cores, 8)
+    shuffle = max(2 * cores, 8)
     # Single-threaded BLAS in every process that inherits this env —
     # in local mode spark.executorEnv does NOT reach python workers;
     # they inherit the JVM env, which inherits this driver process, so

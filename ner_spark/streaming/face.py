@@ -19,7 +19,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ner_spark.checkpoint import lineage
 from ner_spark.fixtures.transcripts import TRANSCRIPT_SCHEMA
+from ner_spark.ner import tagger
 
 
 def stream_transcripts(
@@ -115,16 +117,12 @@ def stream_mentions_foreach_batch(
     tagger and the SAME partition-aligned commit_stage path, giving
     exactly-once stage tables on top of an at-least-once source
     (dedup inside commit via stable bucket overwrite)."""
-    # imported at call time so kgbench's traced run sees the patched
-    # layer functions
-    from ner_spark.checkpoint.lineage import commit_stage
-    from ner_spark.ner.tagger import tag_turns
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        tagged = tag_turns(batch_df, mode=mode)
-        commit_stage(tagged, root, f"stream_tagged/batch={batch_id}")
+        tagged = tagger.tag_turns(batch_df, mode=mode)
+        lineage.commit_stage(tagged, root, f"stream_tagged/batch={batch_id}")
 
     return sink
 

@@ -17,7 +17,11 @@ SF_ORACLE = os.environ.get("NER_SPARK_TEST_SF", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("ner_spark-tests", cores=8, shuffle_partitions=8)
+    s = get_spark(
+        "ner_spark-tests",
+        cores=8,
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     yield s
 
 

@@ -271,7 +271,7 @@ def test_salt_parity_catches_a_layout_that_drops_rows(spark):
     from ner_spark.ops.kg_queries import multiset_diff
 
     t = transcripts_df(spark, 20, whale=False)
-    tagged = tag_turns(t, mode="gazetteer", num_partitions=8)
+    tagged = tag_turns(t, mode="gazetteer")
     cols = ["conv_id", "turn_idx", "start", "end", "surface", "label"]
     a = mentions_from_turns(tagged).select(*cols)
     assert multiset_diff(a, a).count() == 0

@@ -100,6 +100,27 @@ def test_cc_empty(spark):
     assert connected_components(df).count() == 0
 
 
+def test_cc_small_branch_is_one_job(spark):
+    """On a persisted edge frame with duplicate edges and self-loops,
+    the driver branch runs exactly one Spark job (the bounded collect)
+    and still equals union-find."""
+    rng = random.Random(11)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(150)]
+    edges += edges[:10] + [(5, 5), (7, 7)]
+    df = spark.createDataFrame(edges, "src long, dst long").persist()
+    df.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-jobs", "connected_components")
+    try:
+        out = connected_components(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-jobs")) == 1
+    got = {r["node"]: r["component"] for r in out.collect()}
+    df.unpersist()
+    assert got == union_find([(a, b) for a, b in edges if a != b])
+
+
 @pytest.fixture(scope="module")
 def mention_nodes(spark):
     t = transcripts_df(spark, 150)

@@ -73,7 +73,7 @@ def test_triples_match_reference_rule(spark, expected):
 
 def test_triples_partition_invariance(spark, expected):
     t = transcripts_df(spark, N_CONVS, partitions=7)
-    tagged = tag_turns(t, mode="gazetteer", num_partitions=3)
+    tagged = tag_turns(t, mode="gazetteer")
     got = _norm(extract_triples(tagged).toPandas())
     pd.testing.assert_frame_equal(got, expected)
 

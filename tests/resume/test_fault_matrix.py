@@ -201,6 +201,30 @@ def test_stray_file_fails_validation_but_not_the_snapshot(
     assert _fingerprint(read_snapshot(spark, root, "triples")) == gold_fp["triples"]
 
 
+def test_stray_file_does_not_reach_derived_stages(
+    spark, transcripts, gold, tmp_path
+):
+    """A parquet file planted in a committed tagged_turns bucket, then
+    that bucket's mentions row lost: the rerun derives the bucket's
+    mentions from tagged_turns' snapshot, not from its directory, so
+    the stray turns never become mentions."""
+    gold_root, gold_fp = gold
+    root = str(tmp_path / "kg_root")
+    shutil.copytree(gold_root, root)
+    src = sorted(glob.glob(os.path.join(root, "tagged_turns", "part=1", "*.parquet")))
+    assert src
+    shutil.copy(src[0], os.path.join(os.path.dirname(src[0]), "stray.parquet"))
+    _rm(os.path.join(root, "_lineage", "mentions", "part-00001.json"))
+
+    run_resumable(spark, transcripts, root, mode="gazetteer")
+    assert validate_all(spark, root) == {
+        "tagged_turns": False,  # the stray file is still on disk
+        "mentions": True,
+        "triples": True,
+    }
+    assert _snapshot_fingerprints(spark, root) == gold_fp
+
+
 def test_truncated_file_fails_validation(spark, gold, tmp_path):
     """A committed parquet file cut to half its size (a torn rewrite
     or disk damage) makes validation return False instead of failing

@@ -11,7 +11,12 @@ import shutil
 import pandas as pd
 import pytest
 
-from ner_spark.checkpoint.lineage import committed_buckets, lineage_rows, validate_stage
+from ner_spark.checkpoint.lineage import (
+    N_BUCKETS,  # run_resumable's default
+    committed_buckets,
+    lineage_rows,
+    validate_stage,
+)
 from ner_spark.checkpoint.resume import run_resumable, validate_all
 from ner_spark.fixtures.transcripts import transcripts_df
 
@@ -72,9 +77,9 @@ def test_partial_failure_resume(spark, root):
     assert len(lineage_files) >= 3
     for f in lineage_files[:2]:
         os.remove(f)
-    before = set(committed_buckets(root, "triples"))
+    before = set(committed_buckets(root, "triples", N_BUCKETS))
     out = run_resumable(spark, t, root, mode="gazetteer")
-    after = set(committed_buckets(root, "triples"))
+    after = set(committed_buckets(root, "triples", N_BUCKETS))
     assert before < after
     pd.testing.assert_frame_equal(gold, _triples_pdf(out))
     assert validate_stage(spark, root, "triples")
@@ -129,8 +134,9 @@ def test_stale_partitions_not_recommitted(spark, root):
     out = commit_stage(t, root, "probe", n_buckets=8)
     # result holds exactly the input — no stale rows doubled in
     assert out.count() == t.count()
-    got = set(committed_buckets(root, "probe"))
-    assert got <= set(range(8)), got
+    # every lineage row left is in the 8-bucket domain
+    got = {(r["part"], r["n_buckets"]) for r in lineage_rows(root, "probe")}
+    assert {n for _, n in got} == {8} and {p for p, _ in got} <= set(range(8)), got
     assert validate_stage(spark, root, "probe")
     # no out-of-domain dirs survive on disk
     left = [

@@ -35,9 +35,7 @@ spark = get_spark(
     },
 )
 sc = spark.sparkContext
-n_mentions = tag_mentions(
-    transcripts_df(spark, 30), mode="gazetteer", num_partitions=4
-).count()
+n_mentions = tag_mentions(transcripts_df(spark, 30), mode="gazetteer").count()
 # block managers = executors + driver; local-cluster[2,1,·] => 3
 n_bm = sc._jsc.sc().getExecutorMemoryStatus().size()
 print(json.dumps({
@@ -53,9 +51,7 @@ def test_local_cluster_runs_separate_executors_same_results(spark):
     from ner_spark.fixtures.transcripts import transcripts_df
     from ner_spark.ner.tagger import tag_mentions
 
-    expected = tag_mentions(
-        transcripts_df(spark, 30), mode="gazetteer", num_partitions=4
-    ).count()
+    expected = tag_mentions(transcripts_df(spark, 30), mode="gazetteer").count()
     env = dict(os.environ)
     env["PYTHONPATH"] = REPO
     env.pop("PYSPARK_GATEWAY_PORT", None)  # force a fresh JVM

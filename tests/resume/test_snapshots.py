@@ -1,7 +1,7 @@
 """Snapshot-pinned reads over the parquet fallback (operator S2's
 semantics without the Iceberg jar): atomic fileset visibility, time
-travel until overwrite, expiry detection, and the read_transcripts
-integration."""
+travel until overwrite, expiry detection, and read_transcripts staying
+a plain read of a committed stage's directory."""
 
 from __future__ import annotations
 
@@ -55,9 +55,11 @@ def test_snapshot_history_time_travel_and_expiry(spark, tmp_path):
     assert read_snapshot(spark, root, "turns").count() == t.count()
     assert read_snapshot(spark, root, "turns", 1).count() == n1  # pinned
 
-    # commit 3 (no resume): rewrites every bucket → snapshots 1 and 2
-    # expire (the fallback overwrites in place, unlike Iceberg's COW)
-    commit_stage(t, root, "turns", n_buckets=N_BUCKETS, resume=False)
+    # commit 3 (lineage rows deleted first): rewrites every bucket →
+    # snapshots 1 and 2 expire (the fallback overwrites in place,
+    # unlike Iceberg's COW)
+    shutil.rmtree(os.path.join(root, "_lineage", "turns"))
+    commit_stage(t, root, "turns", n_buckets=N_BUCKETS)
     assert read_snapshot(spark, root, "turns").count() == t.count()
     for old in (1, 2):
         with pytest.raises(SnapshotExpiredError):
@@ -90,7 +92,10 @@ def test_snapshot_read_is_atomic_against_stray_files(spark, tmp_path):
     assert read_snapshot(spark, root, "turns").count() == n  # pinned
 
 
-def test_read_transcripts_honors_snapshot_log(spark, tmp_path):
+def test_read_transcripts_reads_a_committed_dir_unpinned(spark, tmp_path):
+    """read_transcripts reads a commit_stage directory as plain parquet
+    (committed stages are read with read_snapshot); a bare parquet dir
+    reads the same way."""
     root = str(tmp_path)
     t = transcripts_df(spark, 24)
     commit_stage(_slice(t, {0, 1}), root, "turns", n_buckets=N_BUCKETS)
@@ -98,17 +103,9 @@ def test_read_transcripts_honors_snapshot_log(spark, tmp_path):
 
     path = os.path.join(root, "turns")
     assert read_transcripts(spark, path).count() == t.count()
-    assert (
-        read_transcripts(spark, path, snapshot_id=1).count()
-        == _slice(t, {0, 1}).count()
-    )
-    # a bare parquet dir (no snapshot log) cannot honor a pin → raise,
-    # never silently return un-pinned rows
     bare = os.path.join(root, "bare")
     t.limit(5).write.parquet(bare)
     assert read_transcripts(spark, bare).count() == 5
-    with pytest.raises(ValueError):
-        read_transcripts(spark, bare, snapshot_id=1)
 
 
 def test_stray_file_cannot_launder_into_next_snapshot(spark, tmp_path):
@@ -197,39 +194,9 @@ def test_same_size_in_place_rewrite_expires_snapshot(spark, tmp_path):
 
 def test_nested_stage_snapshot_read(spark, tmp_path):
     """Streaming commits nested stage names (stream_tagged/batch=N);
-    the read_transcripts fallback must find their snapshot logs."""
+    read_snapshot pins them like any other stage."""
     root = str(tmp_path)
     t = transcripts_df(spark, 8)
     commit_stage(t, root, "stream_tagged/batch=3", n_buckets=N_BUCKETS)
-    path = os.path.join(root, "stream_tagged", "batch=3")
-    assert (
-        read_transcripts(spark, path, snapshot_id=1).count() == t.count()
-    )
-
-
-def test_parent_of_nested_stage_is_not_a_snapshot_log(spark, tmp_path):
-    """root/_snapshots/stream_tagged/ exists only as an INTERMEDIATE
-    dir for the batch=N child logs -- an un-pinned read of the parent
-    path must fall through to the plain directory read (union of all
-    batches), and a pinned one must raise, not claim an empty log."""
-    root = str(tmp_path)
-    t = transcripts_df(spark, 8)
-    commit_stage(t, root, "stream_tagged/batch=0", n_buckets=N_BUCKETS)
-    commit_stage(t, root, "stream_tagged/batch=1", n_buckets=N_BUCKETS)
-    parent = os.path.join(root, "stream_tagged")
-    got = read_transcripts(spark, parent)
-    assert got.count() == 2 * t.count()  # plain union-of-batches read
-    with pytest.raises(ValueError, match="no snapshot log"):
-        read_transcripts(spark, parent, snapshot_id=1)
-
-
-def test_relative_path_snapshot_read(spark, tmp_path, monkeypatch):
-    """A cwd-relative single-segment path (the shape a CLI --input
-    gives) still finds its snapshot log."""
-    root = str(tmp_path)
-    t = transcripts_df(spark, 8)
-    commit_stage(t, root, "turns", n_buckets=N_BUCKETS)
-    monkeypatch.chdir(root)
-    assert read_transcripts(spark, "turns", snapshot_id=1).count() == (
-        t.count()
-    )
+    got = read_snapshot(spark, root, "stream_tagged/batch=3", 1)
+    assert got.count() == t.count()

@@ -41,11 +41,7 @@ def test_distributed_matches_oracle_exactly(spark, oracle_result):
 def test_partition_count_invariance(spark, oracle_result):
     for parts in (1, 3, 8):
         t = transcripts_df(spark, N_CONVS, partitions=parts)
-        got = _sorted_pdf(
-            tag_mentions(t, mode="model", num_partitions=parts)
-            .select(KEY)
-            .toPandas()
-        )
+        got = _sorted_pdf(tag_mentions(t, mode="model").select(KEY).toPandas())
         pd.testing.assert_frame_equal(got, oracle_result)
 
 
@@ -120,9 +116,7 @@ def test_gazetteer_bmes_codec_path(spark):
 def test_mention_id_stable(spark):
     t = transcripts_df(spark, 30)
     a = tag_mentions(t, mode="model").select("mention_id").toPandas()
-    b = tag_mentions(t.repartition(7), mode="model", num_partitions=3).select(
-        "mention_id"
-    ).toPandas()
+    b = tag_mentions(t.repartition(7), mode="model").select("mention_id").toPandas()
     assert sorted(a["mention_id"]) == sorted(b["mention_id"])
 
 
